@@ -85,6 +85,12 @@ class BatchReject(Exception):
 # for compressed-scan estimates; the misclassification risk is
 # asymmetric (serial on a big batch loses unboundedly, a wasted shuffle
 # on a small one loses a bounded ~0.1 s), so err low.
+#
+# Both A/Bs were measured while every Python task also paid a fixed
+# 150-210 ms re-parse of the zips on the worker's sys.path (now skipped,
+# see session._stat_checked_zip_invalidation).  That per-task tax
+# favoured fewer tasks, so the crossover and the bytes-per-task below
+# probably sit too high; they have not been re-measured since.
 _REPARTITION_MIN_BYTES = 1 * 1024 * 1024
 # One Python task per ~256 KB of estimated input (~10-25k reading rows):
 # at 2 MB the A/B measured 8 tasks beating 32 (0.62 s vs 0.75 s — fewer,

@@ -141,11 +141,16 @@ def run_micro_batch_pipeline(
             # stage and no cache-manager pass — the round-7 A/B at the
             # 50x1k latency shape measured the persist()+count() form
             # at 3.1k rows/s vs 5.1k for this (the no-forcing bound is
-            # 5.6k: the residual floor is checkpoint commit + source
-            # listing, not forcing).  The checkpointed blocks are freed
-            # by the ContextCleaner when the batch's DataFrame is
-            # GC'd — one micro-batch of blocks in flight, same bound
-            # the explicit unpersist gave the cached form.
+            # 5.6k).  That floor was not mainly checkpoint commit and
+            # source listing (~105 ms per trigger together on a 4-core
+            # VM): each Python task also re-parsed every zip on the
+            # worker's sys.path, ~280 ms of forcing per trigger at the
+            # edge shape and paid in the sink alike without forcing;
+            # session._stat_checked_zip_invalidation now skips that.
+            # The checkpointed blocks are freed by the ContextCleaner
+            # when the batch's DataFrame is GC'd — one micro-batch of
+            # blocks in flight, same bound the explicit unpersist gave
+            # the cached form.
             out = out.localCheckpoint(eager=True)
         except FilterSetupError:
             # misconfigured stage: fail the QUERY (plugin_init
