@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from foglamp_filter_python35_spark.functions.sqltext import quote_ident
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -49,16 +51,45 @@ _TS_COLUMNS = {
 }
 
 
-# (sf_dir, table) -> inferred parquet read schema.  Schema inference
-# launches one small Spark job per read (~98ms warm at sf0.1); every
-# catalog query build pays it 1-3x, so the full 153-query sweep spends
-# ~15-20s on repeated inference of the same static tables.  Caching the
-# INFERRED SCHEMA (metadata only — never rows, never results; same
-# class as the r17 footer-count read) makes repeat loads job-free
-# (~20ms).  The cache key is the directory+table the schema was read
-# from; the inference conf (nanosAsLong) is pinned by load() itself, so
-# a cached schema always equals what fresh inference would return.
+# (table path, on-disk fingerprint) -> inferred parquet read schema.
+# Schema inference launches one small Spark job per read (~98ms warm at
+# sf0.1); every catalog query build pays it 1-3x, so the full 153-query
+# sweep spends ~15-20s on repeated inference of the same static tables.
+# Caching the INFERRED SCHEMA (metadata only — never rows, never
+# results; same class as the r17 footer-count read) makes repeat loads
+# job-free (~20ms).  The fingerprint (path, mtime, size and inode of
+# every data file) in the key makes a table rewritten in place miss the
+# cache and be re-inferred; the inference conf (nanosAsLong) is pinned
+# by load() itself, so a cached schema always equals what fresh
+# inference would return.
 _SCHEMA_CACHE: dict = {}
+
+
+def _data_files(path: str) -> list[str]:
+    """The files Spark reads for a table path: the path itself for a
+    file; for a directory, mirror Spark's file listing (ADVICE r17) —
+    recurse into partitioned/nested layouts and skip '_'/'.'-prefixed
+    entries (_SUCCESS, _metadata, hidden dirs) at EVERY level."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            os.path.join(root, f)
+            for f in sorted(files)
+            if not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(path, mtime, size, inode) of every data file of a table, or None
+    when the path is not on the local filesystem (never cached)."""
+    if not os.path.exists(path):
+        return None
+    stats = [(f, os.stat(f)) for f in _data_files(path)]
+    return tuple((f, s.st_mtime_ns, s.st_size, s.st_ino) for f, s in stats)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -68,17 +99,19 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     except Exception:
         pass
     path = os.path.join(sf_dir, f"{table}.parquet")
-    cached = _SCHEMA_CACHE.get((sf_dir, table))
+    key = (path, _fingerprint(path))
+    cached = _SCHEMA_CACHE.get(key)
     if cached is not None:
         df = spark.read.schema(cached).parquet(path)
     else:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[(sf_dir, table)] = df.schema
+        if key[1] is not None:
+            _SCHEMA_CACHE[key] = df.schema
     for c in _TS_COLUMNS.get(table, ()):
         field = df.schema[c]
         if isinstance(field.dataType, LongType):
             # integer div — float division would lose precision on e18 nanos
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{quote_ident(c)} div 1000")))
         elif isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
@@ -97,33 +130,24 @@ def parquet_row_count(sf_dir: str, table: str) -> int:
     import pyarrow.parquet as pq  # noqa: PLC0415
 
     path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        # mirror Spark's file listing (ADVICE r17): recurse into
-        # partitioned/nested layouts and skip '_'/'.'-prefixed entries
-        # (_SUCCESS, _metadata, hidden dirs) at EVERY level — a
-        # one-level listdir would silently undercount a partitioned
-        # table and mis-size the lsh_config/ivf_cell_count sketches.
-        total = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = sorted(
-                d for d in dirs if not d.startswith(("_", "."))
-            )
-            total += sum(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                for f in sorted(files)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in _data_files(path)
+        if f.endswith(".parquet")
+    )
 
 
-def dsum(col: Column | str, alias: str, scale: int = 6) -> Column:
-    """Association-order-independent SUM of a double column.
+def dsum(expr: str, alias: str, scale: int = 6) -> Column:
+    """Association-order-independent SUM of a double SQL expression.
 
-    Each value is quantized with PURE IEEE ops — ``floor(x*10^scale +
-    0.5)`` as BIGINT — and summed exactly as integers; the final
-    ``double / 10^scale`` is one deterministic expression mirrored by
-    ``o_dsum``.  Two properties make this the gate mechanism:
+    ``expr`` is SQL expression text — the Spark spelling of the text
+    the ``o_dsum`` oracle twin gets, with float literals ``D``-suffixed
+    so they are DOUBLE, not DECIMAL (e.g.
+    ``"l_extendedprice * (1.0D - l_discount)"``).  Each value is quantized with PURE IEEE ops —
+    ``floor(x*10^scale + 0.5)`` as BIGINT — and summed exactly as
+    integers; the final ``double / 10^scale`` is one deterministic
+    expression mirrored by ``o_dsum``.  Two properties make this the
+    gate mechanism:
 
     * order-free: integer addition is associative, so any partitioning
       or merge order yields the same sum;
@@ -132,24 +156,17 @@ def dsum(col: Column | str, alias: str, scale: int = 6) -> Column:
       carried a latent half-up-vs-half-even tie divergence on dyadic
       inputs — see tests/test_properties.py and the verify notes).
 
+    Built as ONE parsed SQL expression instead of ~10 Column-API py4j
+    round trips — measured 21 -> 0.5 ms of pure driver time per call at
+    plan build (r18).
+
     Bound: exactness requires ``|sum(x)| * 10^scale < 2^63`` (~9.2e12
     at scale 6) — orders of magnitude above the sf0.01/sf0.1 oracle
     gate this exists for.  Production at 100 TB uses plain double sums
     (SCALE.md); a deployment needing exact sums beyond the bound brings
     back ``SUM(CAST(x AS DECIMAL(38,scale)))`` at the 5x agg cost.
     """
-    if isinstance(col, str):
-        # ONE parsed SQL expression (the exact text of the o_dsum twin)
-        # instead of ~10 Column-API py4j round trips — measured 21 ->
-        # 0.5 ms of pure driver time per call at plan build (r18); the
-        # parsed tree is the same Catalyst expression, so sums stay
-        # bit-identical.
-        return F.expr(o_dsum_expr(f"`{col}`", scale)).alias(alias)
-    m = F.lit(float(10**scale))
-    return (
-        F.sum(F.floor(col * m + F.lit(0.5)).cast("bigint")).cast("double")
-        / m
-    ).alias(alias)
+    return F.expr(o_dsum_expr(expr, scale)).alias(alias)
 
 
 def o_dsum_expr(expr: str, scale: int = 6) -> str:
@@ -167,18 +184,11 @@ def o_dsum(expr: str, alias: str, scale: int = 6) -> str:
     return f"{o_dsum_expr(expr, scale)} AS {alias}"
 
 
-def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
-    """Deterministic AVG: the ``dsum`` quantized-integer sum divided by
-    the non-null count, every step mirrored by ``o_davg``."""
-    if isinstance(col, str):
-        # parsed-SQL fast path, same rationale and tree as dsum's
-        return F.expr(o_davg_expr(f"`{col}`", scale)).alias(alias)
-    m = F.lit(float(10**scale))
-    s = (
-        F.sum(F.floor(col * m + F.lit(0.5)).cast("bigint")).cast("double")
-        / m
-    )
-    return (s / F.count(col)).alias(alias)
+def davg(expr: str, alias: str, scale: int = 6) -> Column:
+    """Deterministic AVG of a double SQL expression: the ``dsum``
+    quantized-integer sum divided by the non-null count, every step
+    mirrored by ``o_davg``."""
+    return F.expr(o_davg_expr(expr, scale)).alias(alias)
 
 
 def o_davg_expr(expr: str, scale: int = 6) -> str:

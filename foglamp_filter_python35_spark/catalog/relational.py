@@ -35,6 +35,11 @@ from foglamp_filter_python35_spark.catalog import (
     o_dsum_expr,
 )
 
+# Discounted price, the revenue term of most TPC-H shapes below: the Spark
+# spelling (DOUBLE literal) of the oracles' "l_extendedprice * (1.0 -
+# l_discount)".
+_DISC_PRICE = "l_extendedprice * (1.0D - l_discount)"
+
 # ---------------------------------------------------------------------------
 # pricing_summary — TPC-H Q1 shape: scan + pushed filter + 2-key hash agg
 # with 8 aggregates.  The canonical "is the agg partial+final and the scan
@@ -46,16 +51,14 @@ _Q1_CUTOFF = "2000-06-01"
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
-    charge = disc_price * (1.0 + F.col("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit(_Q1_CUTOFF).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity", "sum_qty"),
             dsum("l_extendedprice", "sum_base_price"),
-            dsum(disc_price, "sum_disc_price"),
-            dsum(charge, "sum_charge"),
+            dsum(_DISC_PRICE, "sum_disc_price"),
+            dsum(f"{_DISC_PRICE} * (1.0D + l_tax)", "sum_charge"),
             davg("l_quantity", "avg_qty"),
             davg("l_extendedprice", "avg_price"),
             davg("l_discount", "avg_disc"),
@@ -94,7 +97,6 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -102,7 +104,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .filter(F.col("r_name") == "ASIA")
         .groupBy("n_name")
-        .agg(dsum(revenue, "revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(dsum(_DISC_PRICE, "revenue"), F.count(F.lit(1)).alias("n_items"))
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
@@ -259,10 +261,9 @@ ORDER BY hour, event_type
 
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.rollup("l_returnflag", "l_linestatus")
-        .agg(dsum(disc_price, "revenue"), F.count(F.lit(1)).alias("n"))
+        .agg(dsum(_DISC_PRICE, "revenue"), F.count(F.lit(1)).alias("n"))
         .orderBy(
             F.col("l_returnflag").asc_nulls_first(),
             F.col("l_linestatus").asc_nulls_first(),
@@ -381,11 +382,10 @@ ORDER BY user_id
 def q_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
-        .agg(dsum(revenue, "revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(dsum(_DISC_PRICE, "revenue"), F.count(F.lit(1)).alias("n_items"))
         .orderBy(F.col("revenue").desc(), F.col("p_brand"))
         .limit(10)
     )
@@ -628,7 +628,6 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") > F.lit(_Q3_DATE).cast("timestamp"))
         .join(
@@ -642,7 +641,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(revenue, "revenue"))
+        .agg(dsum(_DISC_PRICE, "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
     )
@@ -678,9 +677,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24.0)
         )
         .agg(
-            dsum(
-                F.col("l_extendedprice") * F.col("l_discount"), "revenue"
-            ),
+            dsum("l_extendedprice * l_discount", "revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -761,14 +758,13 @@ def q_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     per_supp = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
-        .agg(dsum(revenue, "total_revenue"))
+        .agg(dsum(_DISC_PRICE, "total_revenue"))
     )
     return (
         per_supp.join(
@@ -809,7 +805,6 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     per_cust = (
         li.filter(F.col("l_returnflag") == "R")
         .join(
@@ -820,7 +815,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy("o_custkey")
-        .agg(dsum(revenue, "lost_revenue"))
+        .agg(dsum(_DISC_PRICE, "lost_revenue"))
     )
     return (
         per_cust.join(
@@ -905,7 +900,6 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("cn_key"),
         F.col("n_name").alias("cust_nation"),
     )
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     pair = (
         (F.col("supp_nation") == _Q7_N1) & (F.col("cust_nation") == _Q7_N2)
     ) | ((F.col("supp_nation") == _Q7_N2) & (F.col("cust_nation") == _Q7_N1))
@@ -921,7 +915,7 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
-        .agg(dsum(revenue, "revenue"))
+        .agg(dsum(_DISC_PRICE, "revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -970,10 +964,10 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("sn_key"),
         F.col("n_name").alias("supp_nation"),
     )
-    volume = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
-    national = F.when(
-        F.col("supp_nation") == _Q8_NATION, volume
-    ).otherwise(F.lit(0.0))
+    national = (
+        f"CASE WHEN supp_nation = '{_Q8_NATION}' THEN {_DISC_PRICE}"
+        " ELSE 0.0D END"
+    )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -987,7 +981,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             dsum(national, "national_volume"),
-            dsum(volume, "total_volume"),
+            dsum(_DISC_PRICE, "total_volume"),
         )
         .withColumn(
             "mkt_share",
@@ -1036,7 +1030,6 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load(spark, sf_dir, "supplier")
     part = load(spark, sf_dir, "part")
     nation = load(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.join(
             F.broadcast(part.filter(F.col("p_name").contains(_Q9_TOKEN))),
@@ -1048,7 +1041,7 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("l_shipdate").cast("long").alias("o_year"),
         )
-        .agg(dsum(profit, "sum_profit"))
+        .agg(dsum(_DISC_PRICE, "sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -1077,10 +1070,9 @@ _Q11_FRACTION = 0.0008
 
 def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
-    per_part = li.groupBy("l_partkey").agg(dsum(revenue, "part_value"))
+    per_part = li.groupBy("l_partkey").agg(dsum(_DISC_PRICE, "part_value"))
     total = per_part.agg(
-        dsum(F.col("part_value"), "total_value", scale=6)
+        dsum("part_value", "total_value", scale=6)
     )
     return (
         per_part.crossJoin(F.broadcast(total))
@@ -1151,8 +1143,7 @@ _Q14_START, _Q14_END = "1998-01-01", "1998-04-01"
 def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", revenue).otherwise(F.lit(0.0))
+    promo = f"CASE WHEN p_type = 'PROMO' THEN {_DISC_PRICE} ELSE 0.0D END"
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit(_Q14_START).cast("timestamp"))
@@ -1161,7 +1152,7 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
             dsum(promo, "promo_volume"),
-            dsum(revenue, "total_volume"),
+            dsum(_DISC_PRICE, "total_volume"),
         )
         .withColumn(
             "promo_revenue",
@@ -1298,11 +1289,10 @@ def q_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             & q.between(20.0, 30.0)
         )
     )
-    revenue = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .filter(cond)
-        .agg(dsum(revenue, "revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(dsum(_DISC_PRICE, "revenue"), F.count(F.lit(1)).alias("n_items"))
     )
 
 
@@ -1965,7 +1955,7 @@ def q_salted_enrich_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("category")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value") * F.col("weight"), "weighted_value"),
+            dsum("value * weight", "weighted_value"),
         )
         .orderBy("category")
     )

@@ -537,9 +537,9 @@ def q_asset_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_hours"),
             dsum("x", "sx"),
             dsum("y", "sy"),
-            dsum(F.col("x") * F.col("y"), "sxy"),
-            dsum(F.col("x") * F.col("x"), "sxx"),
-            dsum(F.col("y") * F.col("y"), "syy"),
+            dsum("x * y", "sxy"),
+            dsum("x * x", "sxx"),
+            dsum("y * y", "syy"),
         )
     )
     n = F.col("n_hours").cast("double")
@@ -668,7 +668,7 @@ def q_spc_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             dsum("value", "s1"),
-            dsum(F.col("value") * F.col("value"), "s2"),
+            dsum("value * value", "s2"),
             F.count("value").alias("n_train"),
         )
         .select(

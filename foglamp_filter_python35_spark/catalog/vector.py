@@ -343,7 +343,6 @@ ORDER BY label, dim
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     e = F.col("embedding")
-    nrm = S.norm(e)
     q = F.transform(
         e,
         lambda x: F.least(
@@ -355,7 +354,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        emb.select("vec_id", "embedding", nrm.alias("l2_norm"))
+        emb.select("vec_id", "embedding", S.norm("embedding").alias("l2_norm"))
         .filter(F.col("l2_norm") > 0)
         .select(
             "vec_id",

@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from foglamp_filter_python35_spark.functions.sqltext import quote_ident
 
 
 def _env_int(name: str, default: int) -> int:
@@ -69,44 +71,30 @@ def _env_int(name: str, default: int) -> int:
 _CC_DRIVER_EDGE_BUDGET = _env_int("FSP_CC_DRIVER_EDGE_BUDGET", 100_000)
 
 
-def word_ngrams(tokens_col, n: int = 3):
-    """Distinct word n-gram shingles from a token ARRAY COLUMN (pass a
-    materialized column, not an inline split() — see ``shingles``).
+def word_ngrams(tokens_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles from the token ARRAY COLUMN named
+    ``tokens_col`` (a materialized column, not an inline split() — see
+    ``shingles``).
 
     Documents shorter than n tokens yield an EMPTY array — guarded with
-    when(), because sequence(1, 0) is the descending array [1, 0], not
+    CASE, because sequence(1, 0) is the descending array [1, 0], not
     empty, and would crash element_at.
 
-    Pass the token column as a NAME (string) on hot paths: the string
-    form builds the whole expression as ONE parsed SQL string (one py4j
-    round trip) where the Column form pays ~60 round trips of pure
-    driver latency per call for the lambda plumbing (r18 build-time
-    profile; the parsed tree is the same Catalyst expression, so values
-    are bit-identical — pinned by the dedup oracles).  The Column form
-    stays for ad-hoc callers."""
-    if isinstance(tokens_col, str):
-        toks = f"`{tokens_col}`"
-        parts = ", ".join(
-            f"element_at({toks}, i)"
-            if j == 0
-            else f"element_at({toks}, i + {j})"
-            for j in range(n)
-        )
-        return F.expr(
-            f"CASE WHEN size({toks}) >= {n} THEN"
-            f" array_distinct(transform(sequence(1, size({toks}) -"
-            f" {n - 1}), i -> concat_ws(' ', {parts})))"
-            " ELSE CAST(array() AS ARRAY<STRING>) END"
-        )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(tokens_col) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens_col, i + j) for j in range(n)]
-        ),
+    Built as ONE parsed SQL string (one py4j round trip) where the
+    Column-API lambda plumbing paid ~60 round trips of pure driver
+    latency per call (r18 build-time profile); values are pinned by the
+    dedup oracles."""
+    toks = quote_ident(tokens_col)
+    parts = ", ".join(
+        f"element_at({toks}, i)" if j == 0 else f"element_at({toks}, i + {j})"
+        for j in range(n)
     )
-    return F.when(
-        F.size(tokens_col) >= n, F.array_distinct(grams)
-    ).otherwise(F.array().cast("array<string>"))
+    return F.expr(
+        f"CASE WHEN size({toks}) >= {n} THEN"
+        f" array_distinct(transform(sequence(1, size({toks}) -"
+        f" {n - 1}), i -> concat_ws(' ', {parts})))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
 
 
 def shingles(

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from foglamp_filter_python35_spark.functions.sqltext import quote_ident
+
 
 def _window(partition_cols: Iterable[str], order_cols: Iterable[str]):
     return Window.partitionBy(*partition_cols).orderBy(*order_cols)
@@ -124,7 +126,7 @@ def median_filter(
         raise ValueError("median_filter needs an odd frame (exact middle)")
     w = _window(partition_cols, order_cols)
     frame = w.rowsBetween(-(n - 1), 0)
-    med = F.expr(f"percentile({value_col}, 0.5)").over(frame)
+    med = F.expr(f"percentile({quote_ident(value_col)}, 0.5)").over(frame)
     rn = F.row_number().over(w)
     return (
         df.withColumn(out_col, med)
@@ -470,7 +472,7 @@ def deadband_chunked(
     asset_type = df.schema[asset_col].dataType
     # integer div: float division + floor rounds at chunk boundaries for
     # micros near 2^53 (same hazard as the nano-timestamp rebuild)
-    chunk_expr = F.expr(f"unix_micros(`{ts_col}`) div {int(chunk_micros)}")
+    chunk_expr = F.expr(f"unix_micros({quote_ident(ts_col)}) div {int(chunk_micros)}")
 
     nn = (
         df.select(

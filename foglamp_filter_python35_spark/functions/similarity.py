@@ -3,7 +3,10 @@
 All vector math is Catalyst higher-order functions (``zip_with`` +
 ``aggregate``) — a strict left-fold in doubles, which is bit-identical to
 DuckDB's ``list_inner_product`` over DOUBLE[], making every query here
-oracle-exact with zero tolerance.
+oracle-exact with zero tolerance.  The builders (``dot``, ``norm``,
+``cosine``, ``rp_lsh_sketch``) take column NAMES and emit ONE parsed SQL
+expression each: ~0.5ms of driver time per call where the Column-API
+lambda plumbing cost ~70ms of py4j round trips (r18 build-time profile).
 
 Scale design:
 
@@ -19,104 +22,19 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
-import pandas as pd  # noqa: TC002 — must be module-global: pandas_udf
-# resolves the (future-annotations-stringified) pd.Series hints through
-# this module's globals at decoration time
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from foglamp_filter_python35_spark.functions import cache
-
-# ---------------------------------------------------------------------------
-# Fast vector mode (same toggle pattern as catalog.approx_mode): the exact
-# path computes dots as Catalyst higher-order functions — a strict
-# left-fold in doubles, bit-identical to DuckDB's list arithmetic, which
-# the oracle gate requires.  But higher-order functions are INTERPRETED
-# per element (never whole-stage-codegen'd), and the round-6 scale probe
-# measured them dominating the tuned pair-verify at 200k vectors.  Fast
-# mode swaps dot/norm for ONE Arrow-batched numpy kernel (SIMD pairwise
-# summation) — last-bit rounding differs, so exact stays the default and
-# fast mode is the documented 100 TB hot path.
-# ---------------------------------------------------------------------------
-
-_FAST = os.environ.get("SPARK_GRAFT_FAST_VECTOR", "") == "1"
-
-
-def fast_vector_enabled() -> bool:
-    return _FAST
-
-
-def set_fast_vector_mode(on: bool) -> None:
-    global _FAST  # noqa: PLW0603
-    _FAST = bool(on)
-
-
-class fast_vector_mode:  # noqa: N801 — context-manager, used as a function
-    def __init__(self, on: bool = True) -> None:
-        self._on = on
-
-    def __enter__(self) -> None:
-        self._old = _FAST
-        set_fast_vector_mode(self._on)
-
-    def __exit__(self, *exc) -> None:
-        set_fast_vector_mode(self._old)
-
-
-def _np_dot_udf() -> object:
-    """Arrow-batched numpy dot: one stacked einsum per batch when dims
-    are uniform (the corpus contract), per-row fallback handling NULLs
-    and ragged dims with the exact path's NULL-propagation semantics.
-
-    Corrupt-vector contract (measured, pinned by
-    tests/test_fast_vector.py): Arrow delivers a NULL *element* inside a
-    correctly-dimensioned float vector as NaN — indistinguishable from a
-    genuine NaN element — so the kernel canonicalizes every NaN dot to
-    NULL explicitly (nullable Float64 return, not the serializer's
-    nan-as-null default).  Downstream ``score >= threshold`` filters
-    therefore DROP corrupt rows in fast mode.  The exact fold yields
-    NULL for a NULL element but NaN for a NaN element, and Spark orders
-    NaN above all doubles, so the exact path *accepts* NaN-element rows
-    — fast mode's NULL is the safe side of that divergence."""
-
-    @F.pandas_udf("double")
-    def np_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        try:
-            av = np.stack(a.to_numpy()).astype(np.float64)
-            bv = np.stack(b.to_numpy()).astype(np.float64)
-            if av.shape != bv.shape:
-                raise ValueError
-            res = np.einsum("ij,ij->i", av, bv)
-        except (ValueError, TypeError):
-            res = [
-                float(
-                    np.asarray(x, dtype=np.float64)
-                    @ np.asarray(y, dtype=np.float64)
-                )
-                if x is not None and y is not None and len(x) == len(y)
-                else None
-                for x, y in zip(a, b)
-            ]
-        # canonicalize: None (fallback) -> NaN -> explicit <NA> mask ->
-        # Spark NULL.  An explicit nullable mask, not the serializer's
-        # nan-as-null default, so the contract survives Arrow upgrades.
-        resf = np.asarray(res, dtype=np.float64)
-        out = pd.array(resf, dtype="Float64")
-        out[np.isnan(resf)] = pd.NA
-        return pd.Series(out)
-
-    return np_dot
+from foglamp_filter_python35_spark.functions.sqltext import (
+    double_lit,
+    quote_ident,
+)
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """The exact-mode dot as SQL text — the same Catalyst tree the
-    Column form builds (zip_with cast-to-double multiply, strict
-    left-fold from 0.0), for callers passing COLUMN NAMES: one parsed
-    expression is ~0.5ms of driver time where the Column form pays
-    ~70ms of py4j lambda plumbing per call (r18 build-time profile)."""
+    """The dot product of two SQL array expressions as SQL text:
+    ``zip_with`` cast-to-double multiply, strict left-fold from 0.0."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -124,46 +42,30 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Double dot product.  Exact mode (default): left-fold over
-    ``zip_with`` — bit-compatible with DuckDB, required by the oracle
-    gate.  Fast mode: Arrow-batched numpy (see ``fast_vector_mode``).
+def dot(a: str, b: str) -> Column:
+    """Double dot product of the array columns named ``a`` and ``b``: a
+    left-fold over ``zip_with``, bit-compatible with DuckDB as the
+    oracle gate requires.
 
-    Mismatched dimensions propagate as NULL in both modes (zip_with pads
-    the shorter side) — downstream score filters drop such rows rather
-    than crash; audit with a ``size(a) != size(b)`` check when corpus
-    hygiene is in question (e.g. mixed embedding-model versions).
+    Mismatched dimensions and NULL vectors give NULL (zip_with pads the
+    shorter side) — downstream score filters drop such rows rather than
+    crash; audit with a ``size(a) != size(b)`` check when corpus hygiene
+    is in question (e.g. mixed embedding-model versions).
 
-    Corrupt elements: a NULL element yields NULL in both modes; a NaN
-    element yields NULL in fast mode (the kernel canonicalizes NaN dots
-    to NULL — Arrow can't distinguish the two) but NaN in exact mode,
-    which Spark orders ABOVE all doubles, so exact-mode ``score >=
-    threshold`` filters accept such rows.  Audit NaN elements with
-    ``exists(v, x -> isnan(x))`` when corpus hygiene is in question;
-    see ``_np_dot_udf`` and tests/test_fast_vector.py."""
-    if _FAST:
-        ac = F.col(a) if isinstance(a, str) else a
-        bc = F.col(b) if isinstance(b, str) else b
-        return _np_dot_udf()(ac, bc)
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(f"`{a}`", f"`{b}`"))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    Corrupt elements: a NULL element gives NULL; a NaN element gives
+    NaN, which Spark orders ABOVE all doubles, so ``score >= threshold``
+    filters accept such rows.  Audit NaN elements with
+    ``exists(v, x -> isnan(x))`` when corpus hygiene is in question
+    (pinned by tests/test_dedup_functions.py)."""
+    return F.expr(_dot_sql(quote_ident(a), quote_ident(b)))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str) and not _FAST:
-        q = f"`{a}`"
-        return F.expr(f"sqrt({_dot_sql(q, q)})")
-    if isinstance(a, str):
-        a = F.col(a)
-    return F.sqrt(dot(a, a))
+def norm(a: str) -> Column:
+    q = quote_ident(a)
+    return F.expr(f"sqrt({_dot_sql(q, q)})")
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity; NULL (excluded downstream, never a crash) for
     zero-norm vectors — under Spark 4's default ANSI mode a bare division
     would abort the whole job on one degenerate row."""
@@ -335,76 +237,23 @@ def random_hyperplanes(n_planes: int, dim: int, seed: int = 42):
     ]
 
 
-def _np_bands_udf(planes: list[list[float]], bits_per_band: int) -> object:
-    """Fast-mode sketch kernel: ALL plane dots as ONE matmul per Arrow
-    batch.  The naive fast path (one numpy dot per plane) marshals the
-    vector column through Arrow once per plane — at 44 planes the
-    round-6 probe measured it 3x SLOWER than the interpreted exact
-    fold; a single (batch x dim) @ (dim x planes) matmul is the shape
-    that wins.  Sign agreement with the exact fold differs only for
-    dots within rounding error of 0 — measure-zero for real-valued
-    random hyperplanes, and fast mode is tolerance-bearing by
-    contract.
-
-    Degenerate rows mirror the exact fold EXACTLY: a NULL or
-    dimension-mismatched vector has NULL plane dots there, and
-    ``when(d >= 0, 1).otherwise(0)`` turns a NULL dot into bit 0 — so
-    such rows surface ALL-ZERO band values (bucketing with genuine
-    all-negative-dot rows), never a NULL array and never a task crash.
-    Remainder planes (``len(planes) % bits_per_band``) are dropped in
-    both modes.
-
-    NaN-element caveat (same root as the ``dot`` contract): a NaN
-    element makes every plane dot NaN — numpy's ``nan >= 0`` is False
-    (all bits 0, the degenerate-row bucket), while Spark's
-    NaN-is-largest ordering makes the exact fold's ``d >= 0`` true
-    (all bits 1).  Either way the corrupt row lands in ONE constant
-    bucket; in fast mode its candidate pairs are then dropped by the
-    cosine verify (NaN scores canonicalize to NULL), while in exact
-    mode a NaN score passes ``>= threshold`` — the same documented
-    exact-mode acceptance as in ``dot``."""
-    n_bands = len(planes) // bits_per_band
-    plane_mat = np.asarray(
-        planes[: n_bands * bits_per_band], dtype=np.float64
-    ).T  # (dim, used planes)
-    weights = 1 << np.arange(bits_per_band, dtype=np.int32)
-    zero_row = np.zeros(n_bands, dtype=np.int32)
-
-    @F.pandas_udf("array<int>")
-    def np_bands(vec: pd.Series) -> pd.Series:
-        def row_fallback(x):
-            if x is None or len(x) != plane_mat.shape[0]:
-                return zero_row  # exact path: NULL dots -> all bits 0
-            d = np.asarray(x, dtype=np.float64) @ plane_mat
-            bits = (d >= 0).astype(np.int32)
-            return bits.reshape(n_bands, bits_per_band) @ weights
-
-        try:
-            v = np.stack(vec.to_numpy()).astype(np.float64)
-            # an all-NULL batch stacks to a 1-D object array — ndim
-            # check routes it to the row fallback like any ragged batch
-            if v.ndim != 2 or v.shape[1] != plane_mat.shape[0]:
-                raise ValueError
-            bits = (v @ plane_mat >= 0).astype(np.int32)
-            vals = bits.reshape(len(v), n_bands, bits_per_band) @ weights
-            return pd.Series(list(vals))
-        except (ValueError, TypeError):
-            return pd.Series([row_fallback(x) for x in vec])
-
-    return np_bands
-
-
 def rp_lsh_sketch(
-    vec: Column | str, planes: list[list[float]], bits_per_band: int
+    vec: str, planes: list[list[float]], bits_per_band: int
 ) -> Column:
-    """Sign-LSH band values: one integer per band, bit i = sign of the
-    dot product with plane (band*bits+i).  All JVM-side arithmetic in
-    exact mode; one Arrow-batched matmul kernel in fast mode.  Pass the
-    vector column as a NAME (string) on hot paths — see the expr branch
-    below."""
-    if _FAST:
-        vc = F.col(vec) if isinstance(vec, str) else vec
-        return _np_bands_udf(planes, bits_per_band)(vc)
+    """Sign-LSH band values of the array column named ``vec``: one
+    integer per band, bit i = sign of the dot product with plane
+    (band*bits+i).  Remainder planes (``len(planes) % bits_per_band``)
+    are dropped.  A NULL or dimension-mismatched vector has NULL plane
+    dots, which the ``CASE`` turns into bit 0, so such rows get
+    all-zero bands — never a NULL array, never a task crash.  A
+    non-finite plane value raises ``ValueError`` at build time.
+
+    ONE parsed SQL expression for the whole sketch instead of ~1100
+    Column-API py4j round trips (16 planes x 64 literals measured ~1.2s
+    of pure driver latency per plan build, r18); ``double_lit`` renders
+    each plane value as the same IEEE double bit for bit, so band
+    values match the oracle's (pinned by the LSH oracle parity and
+    test_sketch_sizing)."""
     # Kept as n_planes separate scalar folds DELIBERATELY (r17 probe):
     # a single-pass matrix fold (one aggregate with an n_planes-wide
     # accumulator over a transposed plane literal) was prototyped and
@@ -416,45 +265,17 @@ def rp_lsh_sketch(
     # input-sanitizing guard on that shape.  Scalar-accumulator folds
     # have none of these problems.
     n_bands = len(planes) // bits_per_band
-    if isinstance(vec, str):
-        # ONE parsed SQL expression for the whole sketch instead of
-        # ~1100 Column-API py4j round trips (16 planes x 64 F.lit each
-        # measured ~1.2s of pure driver latency per plan build, r18).
-        # repr() is Python's shortest round-trip float form and Spark
-        # parses double literals via Java parseDouble — the same IEEE
-        # value bit-for-bit — so the parsed tree equals the Column-built
-        # tree and band values are identical (pinned by the LSH oracle
-        # parity and test_sketch_sizing).
-        v = f"`{vec}`"
-
-        def plane_dot(plane: list[float]) -> str:
-            arr = ", ".join(f"{x!r}D" for x in plane)
-            return (
-                f"aggregate(zip_with({v}, array({arr}),"
-                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                " 0.0D, (acc, v) -> acc + v)"
-            )
-
-        band_exprs = []
-        for b in range(n_bands):
-            terms = " + ".join(
-                f"(CASE WHEN {plane_dot(planes[b * bits_per_band + i])}"
-                f" >= 0 THEN 1 ELSE 0 END) * {1 << i}"
-                for i in range(bits_per_band)
-            )
-            band_exprs.append(terms)
-        return F.expr(f"array({', '.join(band_exprs)})")
-    bands = []
+    v = quote_ident(vec)
+    band_exprs = []
     for b in range(n_bands):
-        val: Column | None = None
+        terms = []
         for i in range(bits_per_band):
             plane = planes[b * bits_per_band + i]
-            d = dot(vec, F.array(*[F.lit(x) for x in plane]))
-            bit = F.when(d >= 0, F.lit(1)).otherwise(F.lit(0))
-            term = bit * F.lit(1 << i)
-            val = term if val is None else val + term
-        bands.append(val.alias(f"band{b}"))
-    return F.array(*bands)
+            arr = ", ".join(double_lit(x) for x in plane)
+            d = _dot_sql(v, f"array({arr})")
+            terms.append(f"(CASE WHEN {d} >= 0 THEN 1 ELSE 0 END) * {1 << i}")
+        band_exprs.append(" + ".join(terms))
+    return F.expr(f"array({', '.join(band_exprs)})")
 
 
 def rp_lsh_near_dups(
@@ -549,8 +370,8 @@ def rp_lsh_near_dups(
         # post-shuffle partition and the whole verify runs serially
         # (measured at sf0.1: 515k candidates -> 1 partition, fold
         # verify 3.36s on one core vs 0.51s spread; an Arrow-batched
-        # dot kernel only reached 1.69s — tools/r18_lsh_verify_isolate
-        # .py).  Hash-repartitioning the slim id pairs to the session's
+        # dot kernel only reached 1.69s — OPTIMIZATION_r18.md).
+        # Hash-repartitioning the slim id pairs to the session's
         # core count is the cheapest possible exchange (ids only, the
         # wide vectors are fetched after), spreads the fold evenly, and
         # removes the hot-band straggler at any scale; values are

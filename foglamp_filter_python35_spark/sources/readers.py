@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from foglamp_filter_python35_spark.datamodel import READING_SCHEMA
+from foglamp_filter_python35_spark.functions.sqltext import quote_ident
 
 
 def _normalize_nanos(spark: SparkSession) -> None:
@@ -60,7 +61,7 @@ def read_readings_parquet(spark: SparkSession, path: str) -> DataFrame:
         ):
             df = df.withColumn(
                 field.name,
-                F.timestamp_micros(F.expr(f"`{field.name}` div 1000")),
+                F.timestamp_micros(F.expr(f"{quote_ident(field.name)} div 1000")),
             )
         elif isinstance(field.dataType, TimestampType) and isinstance(
             actual, TimestampNTZType

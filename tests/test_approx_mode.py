@@ -15,7 +15,7 @@ from foglamp_filter_python35_spark.catalog import (
     approx_mode,
 )
 
-pytestmark = pytest.mark.slow  # fast==exact parity also gated by test_fast_vector
+pytestmark = pytest.mark.slow
 
 _SF = "/root/testdata/sf0.001"
 _TOGGLED = ("percentile_summary", "conversion_latency", "sliding_unique_users")

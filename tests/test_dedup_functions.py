@@ -105,10 +105,92 @@ def test_word_ngrams_short_doc_is_empty_not_crash(spark):
     from foglamp_filter_python35_spark.functions.dedup import word_ngrams
 
     df = spark.createDataFrame([("a b",), ("x y z",)], "text string")
-    out = df.select(
-        F.size(word_ngrams(F.split("text", " "), 3)).alias("n")
-    ).collect()
+    out = (
+        df.select(F.split("text", " ").alias("toks"))
+        .select(F.size(word_ngrams("toks", 3)).alias("n"))
+        .collect()
+    )
     assert sorted(r.n for r in out) == [0, 1]
+
+
+def test_backtick_column_names_build_the_same_values(spark):
+    """Names are rendered into parsed SQL through one quoting helper: a
+    column whose name holds a backtick must give the same dot / norm /
+    word_ngrams values as a plain-named copy, not an injection or a
+    parse error."""
+    from foglamp_filter_python35_spark.functions.dedup import word_ngrams
+    from foglamp_filter_python35_spark.functions.similarity import dot, norm
+
+    odd = "v`ec"
+    df = spark.createDataFrame(
+        [
+            ([1.0, 2.0, 3.0], ["a", "b", "c", "d"]),
+            ([0.5, -1.0, 4.0], ["x", "y"]),
+        ],
+        "plain array<double>, toks array<string>",
+    ).select(
+        "plain",
+        F.col("plain").alias(odd),
+        "toks",
+        F.col("toks").alias("t`oks"),
+    )
+    rows = df.select(
+        dot("plain", "plain").alias("d"),
+        dot(odd, odd).alias("d_odd"),
+        norm("plain").alias("n"),
+        norm(odd).alias("n_odd"),
+        word_ngrams("toks", 2).alias("g"),
+        word_ngrams("t`oks", 2).alias("g_odd"),
+    ).collect()
+    for r in rows:
+        assert r.d == r.d_odd and r.n == r.n_odd and r.g == r.g_odd
+    assert [r.d for r in rows] == [14.0, 17.25]
+    assert rows[0].g == ["a b", "b c", "c d"]
+
+
+def test_dot_null_and_ragged_vectors_give_null(spark):
+    from foglamp_filter_python35_spark.functions.similarity import dot
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0], [3.0, 4.0]),  # 11.0
+            (2, None, [1.0, 1.0]),  # NULL side
+            (3, [1.0, 2.0, 3.0], [1.0, 1.0]),  # ragged dims
+        ],
+        "i long, a array<float>, b array<float>",
+    )
+    got = {r.i: r.d for r in df.select("i", dot("a", "b").alias("d")).collect()}
+    assert got == {1: 11.0, 2: None, 3: None}
+
+
+def test_dot_corrupt_element_contract(spark):
+    """A NULL element inside a correctly-dimensioned vector gives a NULL
+    dot (dropped by a ``>= threshold`` filter); a NaN element gives NaN,
+    which Spark orders above all doubles, so it PASSES the filter — the
+    documented contract in ``dot``."""
+    import math
+
+    from foglamp_filter_python35_spark.functions.similarity import dot
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, None, 3.0], [1.0, 2.0, 3.0]),  # NULL element
+            (2, [1.0, float("nan"), 3.0], [1.0, 2.0, 3.0]),  # NaN element
+            (3, [1.0, 2.0, 3.0], [1.0, 2.0, 3.0]),  # clean: 14.0
+        ],
+        "i long, a array<double>, b array<double>",
+    )
+    got = {
+        r.i: r
+        for r in df.select(
+            "i",
+            dot("a", "b").alias("d"),
+            (dot("a", "b") >= F.lit(0.0)).alias("passes"),
+        ).collect()
+    }
+    assert got[1].d is None and got[1].passes is None
+    assert math.isnan(got[2].d) and got[2].passes is True
+    assert got[3].d == 14.0 and got[3].passes is True
 
 
 @pytest.mark.slow

@@ -112,15 +112,26 @@ def test_forced_block_is_staleness_ordered_under_overflow():
     assert window == ["q0", "q1", "q2"]  # stalest survive the cut
 
 
-def test_unchanged_file_is_non_semantic_vs_head():
+def test_unchanged_file_is_non_semantic_vs_head(tmp_path, monkeypatch):
     # a file identical to its boundary version must not force anything
-    # (the AST comparison sees no semantic diff)
-    forced, attribution, skipped = rw.forced_queries(
-        ["foglamp_filter_python35_spark/catalog/__init__.py"],
-        boundary="HEAD",
-    )
+    # (the AST comparison sees no semantic diff).  The boundary is a
+    # throwaway repo whose HEAD holds this very file, so the premise
+    # holds even while the real checkout has uncommitted edits to it.
+    import shutil
+    import subprocess
+
+    rel = "foglamp_filter_python35_spark/catalog/__init__.py"
+    (tmp_path / os.path.dirname(rel)).mkdir(parents=True)
+    shutil.copyfile(os.path.join(rw._REPO, rel), tmp_path / rel)
+    git = ["git", "-c", "user.name=t", "-c", "user.email=t@t",
+           "-c", "commit.gpgsign=false"]
+    for args in (["init", "-q"], ["add", rel], ["commit", "-q", "-m", "b"]):
+        subprocess.run(git + args, cwd=tmp_path, check=True,
+                       capture_output=True)
+    monkeypatch.setattr(rw, "_REPO", str(tmp_path))
+    forced, attribution, skipped = rw.forced_queries([rel], boundary="HEAD")
     assert forced == [] and attribution == {}
-    assert skipped == ["foglamp_filter_python35_spark/catalog/__init__.py"]
+    assert skipped == [rel]
 
 
 def test_docstring_stripping_ignores_doc_only_diffs(tmp_path):

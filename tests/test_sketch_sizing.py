@@ -13,6 +13,7 @@ decorrelating replicas — the same construction as tools/scale_probe.py).
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -97,7 +98,7 @@ def _lsh_candidates(emb, n: int) -> int:
     planes = S.random_hyperplanes(n_planes, _DIM)
     n_bands = n_planes // bits
     sk = emb.select(
-        S.rp_lsh_sketch(F.col("embedding"), planes, bits).alias("bands")
+        S.rp_lsh_sketch("embedding", planes, bits).alias("bands")
     )
     buckets = (
         sk.select(
@@ -152,7 +153,7 @@ def test_default_sketch_keeps_candidates_linear_at_10x(spark):
     # corpus — per-vector candidates grow ~10x, not O(1)
     planes = S.random_hyperplanes(16, _DIM)
     sk = emb10.select(
-        S.rp_lsh_sketch(F.col("embedding"), planes, 4).alias("bands")
+        S.rp_lsh_sketch("embedding", planes, 4).alias("bands")
     )
     frozen = (
         sk.select(F.posexplode("bands").alias("band_id", "band_val"))
@@ -348,3 +349,91 @@ def test_catalog_lsh_defaults_build_job_free(spark):
         jobs = sc.statusTracker().getJobIdsForGroup("catalog-lsh-build-probe")
         sc.setJobGroup("", "")
     assert jobs == [], f"catalog LSH build launched Spark jobs: {jobs}"
+
+
+def test_sketch_null_and_ragged_rows_give_zero_bands(spark):
+    """A NULL or dimension-mismatched vector has NULL plane dots, which
+    the sketch turns into bit 0: all-zero bands, never a NULL array and
+    never a task crash."""
+    planes = S.random_hyperplanes(8, 3)
+    df = spark.createDataFrame(
+        [
+            (1, [0.5, -0.2, 0.9]),
+            (2, None),  # NULL vector
+            (3, [1.0, 2.0]),  # too short
+            (4, [1.0, 2.0, 3.0, 4.0]),  # too long
+        ],
+        "vec_id int, embedding array<double>",
+    )
+    got = {
+        r.vec_id: list(r.b)
+        for r in df.select(
+            "vec_id", S.rp_lsh_sketch("embedding", planes, 4).alias("b")
+        ).collect()
+    }
+    assert got[2] == [0, 0] and got[3] == [0, 0] and got[4] == [0, 0]
+    assert len(got[1]) == 2
+
+
+def test_sketch_drops_remainder_planes(spark):
+    """len(planes) % bits_per_band != 0: only the first n_bands * bits
+    planes are used, so the band values equal those of the truncated
+    plane list."""
+    planes = S.random_hyperplanes(10, 3)  # 10 planes, bits=4 -> 2 bands
+    df = spark.createDataFrame(
+        [(1, [0.5, -0.2, 0.9]), (2, [-1.0, 0.3, 0.1])],
+        "vec_id int, embedding array<double>",
+    )
+    rows = df.select(
+        "vec_id",
+        S.rp_lsh_sketch("embedding", planes, 4).alias("b"),
+        S.rp_lsh_sketch("embedding", planes[:8], 4).alias("b8"),
+    ).collect()
+    assert all(len(r.b) == 2 and r.b == r.b8 for r in rows)
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_sketch_rejects_non_finite_plane_at_build(bad):
+    planes = S.random_hyperplanes(4, 3)
+    planes[2][1] = bad
+    with pytest.raises(ValueError, match="non-finite"):
+        S.rp_lsh_sketch("embedding", planes, 4)
+
+
+def _write_table(path: str, table) -> None:
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "part-0.parquet"))
+
+
+def test_rewritten_table_loads_with_new_schema(spark, tmp_path):
+    """The schema cache is keyed on the table's on-disk fingerprint: a
+    table rewritten in-process with another schema must load with the
+    new schema, not the cached one."""
+    import pyarrow as pa
+
+    path = os.path.join(tmp_path, "t.parquet")
+    _write_table(path, pa.table({"a": [1, 2]}))
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    _write_table(path, pa.table({"a": [3], "b": ["x"]}))
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
+def test_unchanged_table_builds_with_zero_jobs(spark, tmp_path):
+    import pyarrow as pa
+
+    _write_table(
+        os.path.join(tmp_path, "t.parquet"), pa.table({"a": [1, 2]})
+    )
+    load(spark, str(tmp_path), "t")  # first load infers the schema
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-cache-probe", "a repeat load must launch no job")
+    try:
+        load(spark, str(tmp_path), "t").filter(F.col("a") > 1).select("a")
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup("schema-cache-probe")
+        sc.setJobGroup("", "")
+    assert jobs == [], f"repeat load launched Spark jobs: {jobs}"

@@ -13,12 +13,19 @@ Usage::
     python tools/check_window.py --sf-dir /root/testdata/sf0.1 --names span_dedup trigram_lm
     python tools/check_window.py --window-only     # just _DRIVER_WINDOW_ORDER
 
+The last line of output is one JSON object with the per-query result
+(``OK`` / ``rows-only`` / ``FAIL``, wall seconds, row count or error),
+so a full sweep can be committed as an artifact:
+
+    python tools/check_window.py --count 1000 | tail -n 1 > sweep.json
+
 Exit code 0 iff every checked query passes.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -64,19 +71,26 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     bad: list[str] = []
+    results: dict[str, dict] = {}
     t0 = time.perf_counter()
     for n in names:
         spec = qs[n]
+        tq = time.perf_counter()
         try:
             if spec.oracle:
                 compare_spark_vs_oracle(spark, spec.fn, spec.oracle, args.sf_dir)
+                res = {"status": "OK"}
                 print(f"{n}: OK")
             else:
                 rows = spec.fn(spark, args.sf_dir).count()
+                res = {"status": "rows-only", "rows": rows}
                 print(f"{n}: rows-only ({rows} rows)")
         except Exception as exc:  # noqa: BLE001
             bad.append(n)
+            res = {"status": "FAIL", "error": str(exc)[:200]}
             print(f"{n}: FAIL {str(exc)[:200]}")
+        res["s"] = round(time.perf_counter() - tq, 2)
+        results[n] = res
         cache.release()
     print(
         f"\n{len(names) - len(bad)}/{len(names)} pass at {args.sf_dir} "
@@ -84,6 +98,17 @@ def main() -> int:
         + (f"; FAILURES: {bad}" if bad else "")
     )
     spark.stop()
+    print(
+        json.dumps(
+            {
+                "sf": os.path.basename(os.path.normpath(args.sf_dir)),
+                "passed": len(names) - len(bad),
+                "total": len(names),
+                "queries": results,
+            }
+        ),
+        flush=True,
+    )
     return 1 if bad else 0
 
 

@@ -363,11 +363,6 @@ def main() -> None:
     p.add_argument("--run", action="store_true")
     p.add_argument("--mults", default="1,10,100")
     p.add_argument("--only", default=None, help="comma-separated probe names")
-    p.add_argument(
-        "--fast",
-        action="store_true",
-        help="run under fast_vector_mode (numpy dot kernels)",
-    )
     args = p.parse_args()
     mults = {int(m) for m in args.mults.split(",")}
     if args.only:
@@ -383,11 +378,6 @@ def main() -> None:
     if args.build:
         _build(spark)
     if args.run:
-        from foglamp_filter_python35_spark.functions.similarity import (
-            set_fast_vector_mode,
-        )
-
-        set_fast_vector_mode(args.fast)
         res = _run(spark, mults)
         print(json.dumps({"base": BASE_DIR, "probes": res}))
         print("\n| query | x1 (s) | x10 (s) | x100 (s) | t100/t1 |")
