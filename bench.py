@@ -139,7 +139,7 @@ def _python_filter_throughput(spark, sf_dir: str) -> dict:
         readings = readings.persist()
         n = readings.count()
 
-        # --- engine path: Arrow-batched mapInPandas, executor-parallel ---
+        # --- engine path: Arrow-batched mapInArrow, executor-parallel ---
         # best-of-N: the 1x run is short enough that one scheduler hiccup
         # halves the measured rate, so give it an extra attempt
         # even squeezed, the cheap 1x probe keeps a second attempt — a

@@ -11,7 +11,7 @@ Spark engine:
   payload projection, empty-payload drop, metadata carry, type coercion)
   -> Catalyst-native DataFrame operators (``operators.readings``)
 * the arbitrary-Python-function surface (``plugin.cpp:284-287``)
-  -> an Arrow-batched ``mapInPandas`` runner with the reference's
+  -> an Arrow-batched ``mapInArrow`` runner with the reference's
   whole-batch-reject / pass-through-on-error semantics
   (``operators.python_filter``)
 * the micro-batch pipeline (ingest -> filter chain -> output stream)

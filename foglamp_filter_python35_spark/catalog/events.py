@@ -162,7 +162,7 @@ FROM events
 """
 
 # --- T9: the same scale35 semantics, but executed through the faithful
-# python-filter runner (mapInPandas over the readings wire contract) —
+# python-filter runner (mapInArrow over the readings wire contract) —
 # proving the arbitrary-Python surface produces oracle-exact results.
 
 

@@ -16,8 +16,8 @@ Mapping decisions (SURVEY.md §1.5):
   numeric fast path in ``reading: map<string,double>`` and the string
   datapoints in ``reading_str: map<string,string>`` — lossless for the
   reference's 3-type union (int widens into double for analytics; the
-  strict-integer path is preserved by the ``mapInPandas`` runner which sees
-  original Python objects).
+  strict-integer path is preserved by the ``mapInArrow`` runner, whose
+  user function sees original Python objects).
 * ``ts``/``user_ts`` -> TimestampType: ``user_ts`` is device/event time,
   ``ts`` ingest time (``python35_filter.cpp:94-103``) — exactly the
   event-time/processing-time split Structured Streaming watermarks need.

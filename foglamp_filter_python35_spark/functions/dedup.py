@@ -85,14 +85,21 @@ def word_ngrams(tokens_col: str, n: int = 3) -> Column:
     latency per call (r18 build-time profile); values are pinned by the
     dedup oracles."""
     toks = quote_ident(tokens_col)
+    # the lambda variable must differ from the column's name (compared
+    # case-insensitively, as Spark resolves names), or it would capture
+    # the column inside the lambda
+    i = "i"
+    while i == tokens_col.lower():
+        i += "_"
     parts = ", ".join(
-        f"element_at({toks}, i)" if j == 0 else f"element_at({toks}, i + {j})"
+        f"element_at({toks}, {i})" if j == 0
+        else f"element_at({toks}, {i} + {j})"
         for j in range(n)
     )
     return F.expr(
         f"CASE WHEN size({toks}) >= {n} THEN"
         f" array_distinct(transform(sequence(1, size({toks}) -"
-        f" {n - 1}), i -> concat_ws(' ', {parts})))"
+        f" {n - 1}), {i} -> concat_ws(' ', {parts})))"
         " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 

@@ -5,10 +5,13 @@ of readings into a Python list-of-dicts, invoke a user function on it,
 validate + rebuild the result (``plugin.cpp:255-260``, ``:284-287``).
 This module reproduces that contract on Spark:
 
-* execution is Arrow-batched ``mapInPandas`` — the generalization of the
+* execution is Arrow-batched ``mapInArrow`` — the generalization of the
   reference's one performance idea (one Python call per batch, never per
   row, ``plugin.cpp:284-287``), but parallel per executor instead of
-  serialized behind a process-global GIL (``plugin.cpp:141-163``);
+  serialized behind a process-global GIL (``plugin.cpp:141-163``).  The
+  wire codec reads and builds the Arrow batch directly (no pandas round
+  trip): columns in bulk, distinct strings decoded once, only the dict
+  building per row;
 * the user function sees the reference wire shape
   (``python35_filter.cpp:35-119``; documented ``readings35.py:39-51``)::
 
@@ -44,7 +47,8 @@ This module reproduces that contract on Spark:
   returning NULL (``plugin.cpp:213-214``).
 
 Timestamps cross this wire as integer epoch seconds, exactly the
-granularity the reference marshals (``python35_filter.cpp:98-103``).
+granularity the reference marshals (``python35_filter.cpp:98-103``),
+floored, and independent of ``spark.sql.session.timeZone``.
 """
 
 from __future__ import annotations
@@ -52,13 +56,20 @@ from __future__ import annotations
 import datetime as _dt
 import json
 from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from foglamp_filter_python35_spark.config import FilterConfig
 from foglamp_filter_python35_spark.datamodel import READING_SCHEMA
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 Wire = list[dict]
 FilterFn = Callable[[Wire], Wire]
@@ -71,7 +82,7 @@ class BatchReject(Exception):
     """Raised when a returned batch violates the type/shape contract."""
 
 
-# Skip the pre-mapInPandas spreading shuffle below this optimizer size
+# Skip the pre-mapInArrow spreading shuffle below this optimizer size
 # estimate: for small inputs the shuffle's fixed cost exceeds the serial
 # processing it would save (the reference processes one batch per call on
 # one thread, plugin.cpp:284-287 — small batches are its home turf).
@@ -86,11 +97,14 @@ class BatchReject(Exception):
 # asymmetric (serial on a big batch loses unboundedly, a wasted shuffle
 # on a small one loses a bounded ~0.1 s), so err low.
 #
-# Both A/Bs were measured while every Python task also paid a fixed
+# Both A/Bs predate the Arrow wire codec: they ran Spark's pandas round
+# trip (132-135 ms per 10k-row batch, against 38-61 ms for the Arrow
+# codec, on a 4-vCPU VM), and every Python task also paid a fixed
 # 150-210 ms re-parse of the zips on the worker's sys.path (now skipped,
-# see session._stat_checked_zip_invalidation).  That per-task tax
-# favoured fewer tasks, so the crossover and the bytes-per-task below
-# probably sit too high; they have not been re-measured since.
+# see session._stat_checked_zip_invalidation).  The per-task tax
+# favoured fewer tasks and the slower codec favoured more, so the
+# crossover and the bytes-per-task below have not been re-measured for
+# today's code.
 _REPARTITION_MIN_BYTES = 1 * 1024 * 1024
 # One Python task per ~256 KB of estimated input (~10-25k reading rows):
 # at 2 MB the A/B measured 8 tasks beating 32 (0.62 s vs 0.75 s — fewer,
@@ -197,91 +211,119 @@ def run_python_filter(
             except AttributeError:
                 pass  # non-function callable without settable attrs
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             try:
-                wire = _to_wire(pdf, compat_bytes)
-                result = fn(wire)
-                out = _from_wire(result)
+                wire = _batch_to_wire(batch, compat_bytes)
+                out = _wire_to_batch(fn(wire), batch.schema)
             except Exception:
                 # any failure => forward the input batch unmodified
                 # (plugin.cpp:295-310, :338-342)
-                yield pdf
+                yield batch
                 continue
             yield out
 
-    return df.mapInPandas(runner, READING_SCHEMA)
+    return df.mapInArrow(runner, READING_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# wire codecs
+# wire codec
 # ---------------------------------------------------------------------------
 
-
-def _as_mapping(v) -> dict:
-    """Arrow hands MapType to pandas as dict or list-of-(k,v) tuples."""
-    if v is None:
-        return {}
-    if isinstance(v, dict):
-        return v
-    return dict(v)
+#: ``READING_SCHEMA`` in Arrow form, for codec callers with no input batch
+#: to take the types from (the pandas adapters)
+_ARROW_SCHEMA = to_arrow_schema(READING_SCHEMA)
 
 
-def _to_wire(pdf: pd.DataFrame, compat_bytes: bool) -> Wire:
-    # vectorize the metadata columns once per batch; only the payload
-    # dicts need per-row Python
-    ids = pdf["id"].to_numpy(dtype="object")
-    assets = pdf["asset_code"].to_numpy(dtype="object")
-    ts_s = (pdf["ts"].astype("datetime64[s]").astype("int64")).to_numpy()
-    ts_null = pdf["ts"].isna().to_numpy()
-    uts_s = (pdf["user_ts"].astype("datetime64[s]").astype("int64")).to_numpy()
-    uts_null = pdf["user_ts"].isna().to_numpy()
+def _numbers(col: pa.Array, div: int = 1) -> list:
+    """A numeric column as Python numbers, nulls as None; integer columns
+    are floor-divided by ``div``."""
+    raw = col.fill_null(0).to_numpy()
+    out = (raw // div if div != 1 else raw).tolist()
+    if col.null_count:
+        for i in np.flatnonzero(col.is_null().to_numpy(zero_copy_only=False)):
+            out[i] = None
+    return out
 
-    ids_null = pdf["id"].isna().to_numpy()
-    rmaps = pdf["reading"].to_numpy(dtype="object")
-    smaps = pdf["reading_str"].to_numpy(dtype="object")
+
+def _strings(col: pa.Array, encode: bool) -> list:
+    """A string column as Python objects, nulls as None: each DISTINCT
+    value becomes one ``str`` (``bytes`` when ``encode``) through
+    ``dictionary_encode``, so the per-slot work is an index lookup."""
+    enc = pc.dictionary_encode(col)
+    values = enc.dictionary.to_pylist()
+    if encode:
+        values = [v.encode() for v in values]
+    values.append(None)
+    codes = enc.indices.fill_null(len(values) - 1).to_numpy()
+    return np.asarray(values, dtype=object)[codes].tolist()
+
+
+def _map_dicts(col: pa.MapArray, values: list, encode: bool) -> list[dict]:
+    """One dict per map slot, null values left out.  A null slot is empty:
+    Arrow allows a null slot a non-empty offset range."""
+    keys = _strings(col.keys, encode)
+    offs = col.offsets.to_numpy().tolist()
+    valid = col.is_valid().to_numpy(zero_copy_only=False).tolist()
+    has_null = col.items.null_count > 0
+    out = []
+    for i, ok in enumerate(valid):
+        a, b = offs[i], offs[i + 1]
+        if not ok or a == b:
+            out.append({})
+        elif has_null:
+            out.append(
+                {k: v for k, v in zip(keys[a:b], values[a:b]) if v is not None}
+            )
+        else:
+            out.append(dict(zip(keys[a:b], values[a:b])))
+    return out
+
+
+def _batch_to_wire(batch: pa.RecordBatch, compat_bytes: bool) -> Wire:
+    """The reference wire for one Arrow batch: columns are read in bulk and
+    only the dict building runs per row.  ``ts``/``user_ts`` become epoch
+    seconds, floored — Arrow carries epoch µs whatever the session time
+    zone, which is what the reference hands its filter."""
+    ids = _numbers(batch.column("id"))
+    assets = _strings(batch.column("asset_code"), compat_bytes)
+    ts = _numbers(batch.column("ts").cast(pa.int64()), 1_000_000)
+    uts = _numbers(batch.column("user_ts").cast(pa.int64()), 1_000_000)
+    rmap, smap = batch.column("reading"), batch.column("reading_str")
+    nums = _map_dicts(rmap, _numbers(rmap.items), compat_bytes)
+    strs = _map_dicts(smap, _strings(smap.items, compat_bytes), compat_bytes)
 
     out: Wire = []
-    for i in range(len(pdf)):
-        reading: dict = {}
-        for k, v in _as_mapping(rmaps[i]).items():
-            if v is not None:
-                reading[k] = v
-        for k, v in _as_mapping(smaps[i]).items():
-            if v is not None:
-                reading[k] = v
-        if compat_bytes:
-            reading = {
-                (k.encode() if isinstance(k, str) else k): (
-                    v.encode() if isinstance(v, str) else v
-                )
-                for k, v in reading.items()
-            }
-        asset = assets[i]
-        if compat_bytes and isinstance(asset, str):
-            asset = asset.encode()
-        rec = {"asset_code": asset, "reading": reading}
-        if not ids_null[i]:
-            rec["id"] = int(ids[i])
-        if not ts_null[i]:
-            rec["ts"] = int(ts_s[i])
-        if not uts_null[i]:
-            rec["user_ts"] = int(uts_s[i])
+    for i in range(batch.num_rows):
+        reading = nums[i]
+        if strs[i]:
+            reading.update(strs[i])
+        rec = {"asset_code": assets[i], "reading": reading}
+        if ids[i] is not None:
+            rec["id"] = ids[i]
+        if ts[i] is not None:
+            rec["ts"] = ts[i]
+        if uts[i] is not None:
+            rec["user_ts"] = uts[i]
         out.append(rec)
     return out
 
 
-def _from_wire(result: Wire) -> pd.DataFrame:
+def _wire_to_batch(
+    result: Wire, schema: pa.Schema = _ARROW_SCHEMA
+) -> pa.RecordBatch:
+    """Validate a filter's result and build the readings batch, typed as
+    ``schema`` (the input batch's, so every batch a task yields shares one
+    schema).  Raises ``BatchReject`` on a shape or type the contract
+    forbids."""
     if not isinstance(result, (list, tuple)):
         raise BatchReject("filter must return a list of reading dicts")
-    ids, assets, tss, user_tss, readings, readings_str = [], [], [], [], [], []
+    ids, assets, tss, user_tss = [], [], [], []
+    num_keys, num_vals, num_offs = [], [], [0]
+    str_keys, str_vals, str_offs = [], [], [0]
     # T7 default for absent metadata: "new readings have new timestamps"
-    # — one micros-precision stamp per batch, appended as int64 so the
-    # column builds vectorized (a per-row pd.Timestamp costs ~1 µs/row,
-    # measurable at 1 M rows)
-    # .timestamp() must run on the AWARE datetime: a naive datetime is
-    # interpreted in the host's local timezone, shifting the stamp by the
-    # UTC offset on any non-UTC host
+    # — one epoch-µs stamp per batch.  .timestamp() must run on the AWARE
+    # datetime: a naive one is read in the host's local time zone
     now_us = int(
         _dt.datetime.now(tz=_dt.timezone.utc).timestamp() * 1_000_000
     )
@@ -318,29 +360,47 @@ def _from_wire(result: Wire) -> pd.DataFrame:
             asset = asset.decode()
         ids.append(int(rec["id"]) if "id" in rec else None)
         assets.append(asset)
-        tss.append(
-            int(rec["ts"]) * 1_000_000 if "ts" in rec else now_us
-        )
+        tss.append(int(rec["ts"]) * 1_000_000 if "ts" in rec else now_us)
         user_tss.append(
             int(rec["user_ts"]) * 1_000_000 if "user_ts" in rec else now_us
         )
-        readings.append(num)
-        readings_str.append(strs)
-    import numpy as np  # noqa: PLC0415
+        num_keys.extend(num)
+        num_vals.extend(num.values())
+        num_offs.append(len(num_keys))
+        str_keys.extend(strs)
+        str_vals.extend(strs.values())
+        str_offs.append(len(str_keys))
 
-    # object dtype is required even when empty — pandas would otherwise
-    # default empty columns to float64, which Arrow cannot map-convert
-    return pd.DataFrame(
-        {
-            "id": pd.array(ids, dtype="Int64"),
-            "asset_code": pd.Series(assets, dtype="object"),
-            "ts": pd.Series(
-                np.asarray(tss, dtype="int64").view("datetime64[us]")
-            ),
-            "user_ts": pd.Series(
-                np.asarray(user_tss, dtype="int64").view("datetime64[us]")
-            ),
-            "reading": pd.Series(readings, dtype="object"),
-            "reading_str": pd.Series(readings_str, dtype="object"),
-        }
+    def map_array(name: str, keys: list, vals: list, offs: list) -> pa.Array:
+        typ = schema.field(name).type
+        return pa.MapArray.from_arrays(
+            pa.array(offs, pa.int32()),
+            pa.array(keys, typ.key_type),
+            pa.array(vals, typ.item_type),
+            type=typ,
+        )
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, schema.field("id").type),
+            pa.array(assets, schema.field("asset_code").type),
+            pa.array(tss, schema.field("ts").type),
+            pa.array(user_tss, schema.field("user_ts").type),
+            map_array("reading", num_keys, num_vals, num_offs),
+            map_array("reading_str", str_keys, str_vals, str_offs),
+        ],
+        schema=schema,
     )
+
+
+# pandas adapters over the Arrow codec, for callers that hold a pandas
+# frame of readings (naive timestamps are read as UTC)
+
+
+def _to_wire(pdf: pd.DataFrame, compat_bytes: bool) -> Wire:
+    batch = pa.RecordBatch.from_pandas(pdf, _ARROW_SCHEMA, preserve_index=False)
+    return _batch_to_wire(batch, compat_bytes)
+
+
+def _from_wire(result: Wire) -> pd.DataFrame:
+    return _wire_to_batch(result).to_pandas()

@@ -13,10 +13,14 @@ Spark mapping:
   micro-batch is the ReadingSet analog.
 * S2 output  -> ``writeStream.foreachBatch(sink)``; intra-query chaining
   is DataFrame composition (``registry.apply_pipeline``).
-* S3 degraded behavior -> the foreachBatch wrapper catches any transform
-  failure and forwards the INPUT batch to the sink unmodified —
+* S3 degraded behavior -> the foreachBatch wrapper catches any failure
+  to build the stages, and any error raised while the sink's job runs
+  them, logs it and forwards the INPUT batch to the sink unmodified —
   at-least-the-input delivery, never loss by crash
-  (``plugin.cpp:268-282``, ``:295-310``, ``:338-342``).
+  (``plugin.cpp:268-282``, ``:295-310``, ``:338-342``).  A T9 error
+  never reaches it: T9 falls back per Arrow batch in its worker.  Each
+  trigger runs one Spark job (the sink's); the ``SinkFn`` requirement
+  below keeps the retry with the input exactly-once.
 * C3 reconfigure -> stop + rebuild + restart from checkpoint (exactly-once
   resumption replaces the reference's config mutex,
   ``python35_filter.cpp:310-436``).
@@ -28,6 +32,7 @@ Spark mapping:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from typing import Any
 
@@ -49,6 +54,16 @@ from pyspark.sql.types import (
 from foglamp_filter_python35_spark.registry import Stage, apply_pipeline
 
 SinkFn = Callable[[DataFrame, int], None]
+"""A micro-batch sink: ``sink(batch_df, epoch_id)``.
+
+Requirement: **a sink call that raises must leave no rows behind.**  The
+S3 fallback calls the sink again with the input batch after a failed
+call, so a sink that kept part of the failed write would deliver those
+rows twice.  Spark's file sinks meet it (a failed write job aborts and
+commits no files), and so does ``snapshot_table.snapshot_sink`` (its
+manifest, which alone makes files visible, is published last)."""
+
+_log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -133,35 +148,29 @@ def run_micro_batch_pipeline(
         if tracker is not None:
             tracker.record(query_name, "in", batch_df)
         try:
-            out = apply_pipeline(batch_df, stages)
-            # force evaluation inside the try so transform errors
-            # (including ones raised lazily inside Python workers) hit
-            # the fallback BEFORE the sink sees any rows.  Eager
-            # localCheckpoint materializes in ONE job with no aggregate
-            # stage and no cache-manager pass — the round-7 A/B at the
-            # 50x1k latency shape measured the persist()+count() form
-            # at 3.1k rows/s vs 5.1k for this (the no-forcing bound is
-            # 5.6k).  That floor was not mainly checkpoint commit and
-            # source listing (~105 ms per trigger together on a 4-core
-            # VM): each Python task also re-parsed every zip on the
-            # worker's sys.path, ~280 ms of forcing per trigger at the
-            # edge shape and paid in the sink alike without forcing;
-            # session._stat_checked_zip_invalidation now skips that.
-            # The checkpointed blocks are freed by the ContextCleaner
-            # when the batch's DataFrame is GC'd — one micro-batch of
-            # blocks in flight, same bound the explicit unpersist gave
-            # the cached form.
-            out = out.localCheckpoint(eager=True)
+            # one Spark job per trigger, the sink's: an error a stage
+            # raises while that job runs lands below like a build error
+            # (T9's own errors never do — it falls back per Arrow batch
+            # in its worker), and the SinkFn requirement keeps the retry
+            # with the input exactly-once
+            sink(apply_pipeline(batch_df, stages), epoch_id)
         except FilterSetupError:
             # misconfigured stage: fail the QUERY (plugin_init
             # returning NULL) — falling back here would silently
             # forward unfiltered data every micro-batch
             raise
-        except Exception:
-            # S3: error => pass the input through (plugin.cpp:295-310)
+        except Exception as exc:
+            # S3: error => pass the input through (plugin.cpp:295-310),
+            # logged as the reference logs the Python error
+            # (python35_filter.cpp:263-301)
+            _log.warning(
+                "%s: epoch %d forwards its input batch after %s: %s",
+                query_name,
+                epoch_id,
+                type(exc).__name__,
+                exc,
+            )
             sink(batch_df, epoch_id)
-            return
-        sink(out, epoch_id)
 
     writer = (
         stream.writeStream.foreachBatch(process)

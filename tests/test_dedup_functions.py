@@ -113,6 +113,22 @@ def test_word_ngrams_short_doc_is_empty_not_crash(spark):
     assert sorted(r.n for r in out) == [0, 1]
 
 
+def test_word_ngrams_token_column_named_like_the_lambda_variable(spark):
+    """A token column named ``i`` (the n-gram lambda's variable name)
+    gives the same n-grams as the same data under another name, instead
+    of being captured by the lambda variable."""
+    from foglamp_filter_python35_spark.functions.dedup import word_ngrams
+
+    data = [(["a", "b", "c"],), (["x", "y"],), (["z"],)]
+    as_i = spark.createDataFrame(data, "i array<string>")
+    as_toks = spark.createDataFrame(data, "toks array<string>")
+    got = [r.g for r in as_i.select(word_ngrams("i", 2).alias("g")).collect()]
+    want = [
+        r.g for r in as_toks.select(word_ngrams("toks", 2).alias("g")).collect()
+    ]
+    assert got == want == [["a b", "b c"], ["x y"], []]
+
+
 def test_backtick_column_names_build_the_same_values(spark):
     """Names are rendered into parsed SQL through one quoting helper: a
     column whose name holds a backtick must give the same dot / norm /

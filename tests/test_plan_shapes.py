@@ -94,10 +94,10 @@ def test_python_filter_is_the_only_python_plan(spark):
         q_python_filter_scale35,
     )
 
-    # T9 is the deliberate Python surface — MapInPandas, Arrow-batched,
+    # T9 is the deliberate Python surface — MapInArrow, Arrow-batched,
     # and exactly one such node
     plan = E.formatted_plan(q_python_filter_scale35(spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan  # never row-at-a-time Python
 
 
@@ -701,7 +701,7 @@ def test_python_nodes_only_in_documented_arrow_surfaces(spark):
     from foglamp_filter_python35_spark.functions import cache
 
     arrow_allowed = {
-        "python_filter_scale35": {"MapInPandas"},
+        "python_filter_scale35": {"MapInArrow"},
         "deadband_suppress": {"FlatMapGroupsInPandas"},
         "deadband_chunked": {"FlatMapGroupsInPandas"},
         "ema_smooth": {"FlatMapGroupsInPandas"},
@@ -714,6 +714,7 @@ def test_python_nodes_only_in_documented_arrow_surfaces(spark):
         "FlatMapGroupsInPandas",
         "ArrowEvalPython",
         "PythonMapInArrow",
+        "MapInArrow",
     )
     offenders = {}
     for name, spec in all_queries().items():

@@ -262,15 +262,15 @@ def test_default_timestamp_is_utc_regardless_of_host_tz():
     import time
 
     from foglamp_filter_python35_spark.operators.python_filter import (
-        _from_wire,
+        _wire_to_batch,
     )
 
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"  # UTC-5/-4 — offset never 0
     time.tzset()
     try:
-        df = _from_wire([{"asset_code": "a", "reading": {"v": 1.0}}])
-        stamped = df["ts"].iloc[0].to_pydatetime()
+        batch = _wire_to_batch([{"asset_code": "a", "reading": {"v": 1.0}}])
+        stamped = batch.column("ts")[0].as_py().replace(tzinfo=None)
         now_utc = dt.datetime.now(tz=dt.timezone.utc).replace(tzinfo=None)
         assert abs((stamped - now_utc).total_seconds()) < 60
     finally:
@@ -279,6 +279,70 @@ def test_default_timestamp_is_utc_regardless_of_host_tz():
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
+
+
+def test_wire_is_epoch_seconds_under_non_utc_session_tz(spark):
+    """The wire carries epoch seconds and the T7 stamp is UTC "now" under
+    any ``spark.sql.session.timeZone``: Arrow hands the runner epoch µs,
+    so no session offset enters either direction.  Pre-1970 stamps floor
+    (…:58.5 -> -2), and NULL id/ts and a NULL ``reading`` map cross the
+    wire as absent keys / an empty payload part."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    utc = dt.timezone.utc
+    t1 = dt.datetime(2024, 1, 1, 12, 0, 0, tzinfo=utc)  # 1704110400
+    pre = dt.datetime(1969, 12, 31, 23, 59, 58, 500000, tzinfo=utc)
+    rows = [
+        (1, "a", t1, t1, {"v": 1.0}, {}),
+        (2, "a", pre, pre, {"v": 2.0}, {}),
+        (None, "a", None, t1, None, {"unit": "C"}),
+    ]
+
+    def probe(readings):
+        for r in readings:
+            r["reading"]["ts_seen"] = float(r.get("ts", -999))
+            r["reading"]["uts_seen"] = float(r.get("user_ts", -999))
+            r["reading"]["id_seen"] = float("id" in r)
+        return readings
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = make_readings(spark, rows).coalesce(1)
+        out = run_python_filter(df, probe, FilterConfig(enable=True)).select(
+            "id",
+            F.unix_micros("ts").alias("ts_us"),
+            F.unix_micros("user_ts").alias("uts_us"),
+            "reading",
+            "reading_str",
+        )
+        got = sorted(
+            out.collect(),
+            key=lambda r: (r["reading"]["uts_seen"], r["reading"]["id_seen"]),
+        )
+        now_us = time.time() * 1_000_000
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+    pre_row, null_row, t1_row = got
+    assert t1_row["reading"] == {
+        "v": 1.0, "ts_seen": 1704110400.0, "uts_seen": 1704110400.0,
+        "id_seen": 1.0,
+    }
+    assert t1_row["ts_us"] == t1_row["uts_us"] == 1704110400 * 1_000_000
+    assert pre_row["reading"]["ts_seen"] == -2.0  # floored, not truncated
+    assert pre_row["ts_us"] == -2_000_000  # the wire's seconds, written back
+    # NULL reading map -> only the probe's datapoints; NULL id stays null;
+    # NULL ts -> absent from the wire -> stamped with UTC now (T7)
+    assert null_row["id"] is None
+    assert null_row["reading"] == {
+        "ts_seen": -999.0, "uts_seen": 1704110400.0, "id_seen": 0.0,
+    }
+    assert null_row["reading_str"] == {"unit": "C"}
+    assert null_row["uts_us"] == 1704110400 * 1_000_000
+    assert abs(null_row["ts_us"] - now_us) < 60 * 1_000_000
 
 
 def test_small_input_skips_spreading_shuffle(spark, monkeypatch, tmp_path):

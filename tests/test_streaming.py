@@ -92,6 +92,106 @@ def test_pipeline_error_falls_back_to_input(spark, events_stream_dir, tmp_path):
     assert sum(got) == 1000
 
 
+def _parquet_sink(path):
+    return lambda df, epoch: df.write.mode("append").parquet(path)
+
+
+def _assert_input_once_no_strays(spark, sink_dir, events_stream_dir):
+    """The sink holds each input row exactly once, unmodified (so no
+    failed write left a part file behind), and no ``_temporary``
+    directory or other stray file remains."""
+    want = sorted(
+        (r["event_id"], r["value"])
+        for r in spark.read.parquet(events_stream_dir).collect()
+    )
+    got = sorted(
+        (r["id"], r["reading"]["value"])
+        for r in spark.read.parquet(sink_dir).collect()
+    )
+    assert got == want
+    for _root, dirs, files in os.walk(sink_dir):
+        assert not [d for d in dirs if d.startswith("_")], dirs
+        for f in files:
+            assert f == "_SUCCESS" or f.startswith((".", "part-")), f
+
+
+def test_stage_error_at_execution_forwards_input_exactly_once(
+    spark, events_stream_dir, tmp_path, caplog
+):
+    """A stage that builds fine but raises while the sink's job runs (no
+    forcing job catches it first): the failed write commits nothing, the
+    input batch is written once instead, and the fallback is logged."""
+    readings = _readings_stream(spark, events_stream_dir)
+
+    def raise_at_execution(df, cfg):
+        return df.withColumn(
+            "id",
+            F.when(
+                F.col("id").isNotNull(), F.raise_error(F.lit("stage boom"))
+            ).otherwise(F.col("id")),
+        )
+
+    stages = [
+        Stage(
+            "raise_exec",
+            raise_at_execution,
+            FilterConfig("raise_exec", enable=True),
+        )
+    ]
+    sink_dir = str(tmp_path / "sink")
+    with caplog.at_level(
+        "WARNING", logger="foglamp_filter_python35_spark.streaming.pipeline"
+    ):
+        q = run_micro_batch_pipeline(
+            readings,
+            stages,
+            sink=_parquet_sink(sink_dir),
+            checkpoint_dir=str(tmp_path / "ckpt_raise_exec"),
+            query_name="raise-exec",
+        )
+        _run_to_completion(q)
+    _assert_input_once_no_strays(spark, sink_dir, events_stream_dir)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1, msgs
+    assert msgs[0].startswith("raise-exec: epoch 0 forwards its input batch")
+    assert "stage boom" in msgs[0]
+
+
+def test_raising_t9_forwards_input_exactly_once(
+    spark, events_stream_dir, tmp_path, caplog
+):
+    """An always-raising T9 fn falls back per Arrow batch inside the
+    worker: the one sink job writes the input once, and the driver-side
+    fallback never fires."""
+    from foglamp_filter_python35_spark.operators.python_filter import (
+        run_python_filter,
+    )
+
+    def boom(readings):
+        raise RuntimeError("script error")
+
+    stages = [
+        Stage(
+            "t9_boom",
+            lambda df, cfg: run_python_filter(df, boom, cfg),
+            FilterConfig("t9_boom", enable=True),
+        )
+    ]
+    sink_dir = str(tmp_path / "sink")
+    with caplog.at_level(
+        "WARNING", logger="foglamp_filter_python35_spark.streaming.pipeline"
+    ):
+        q = run_micro_batch_pipeline(
+            _readings_stream(spark, events_stream_dir),
+            stages,
+            sink=_parquet_sink(sink_dir),
+            checkpoint_dir=str(tmp_path / "ckpt_t9_boom"),
+        )
+        _run_to_completion(q)
+    _assert_input_once_no_strays(spark, sink_dir, events_stream_dir)
+    assert caplog.records == []
+
+
 def test_disabled_stage_is_passthrough(spark, events_stream_dir, tmp_path):
     readings = _readings_stream(spark, events_stream_dir)
     stages = [

@@ -72,6 +72,7 @@ COUNTED = (
     "BroadcastHashJoin",
     "BroadcastNestedLoopJoin",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
 )
 
@@ -222,7 +223,8 @@ def main() -> int:
             f"{c['BroadcastExchange']} broadcasts, "
             f"SMJ={c['SortMergeJoin']} BHJ={c['BroadcastHashJoin']} "
             f"BNLJ={c['BroadcastNestedLoopJoin']} "
-            f"arrowPy={c['MapInPandas'] + c['FlatMapGroupsInPandas']}"
+            "arrowPy="
+            f"{c['MapInPandas'] + c['MapInArrow'] + c['FlatMapGroupsInPandas']}"
         )
     if allowed_hits:
         print("\nallowlisted full-width scans (by operator contract):")

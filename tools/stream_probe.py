@@ -3,7 +3,7 @@
 The reference is a micro-batch filter: upstream pushes a ReadingSet,
 one GIL-serialized Python call transforms it, the result flows to the
 next stage (plugin.cpp:226-352).  `bench.py` measures that boundary in
-BATCH mode (mapInPandas vs the simulated single-interpreter loop); this
+BATCH mode (mapInArrow vs the simulated single-interpreter loop); this
 tool measures it END-TO-END ON STRUCTURED STREAMING — source, filter
 chain, S3 error contract, sink, checkpointing — the way a deployment
 actually runs it, at two micro-batch shapes:
@@ -19,11 +19,11 @@ dataflow with lineage observe + degraded-path wrapper) except the
 stateful one:
 
 - passthrough: disabled stage (C4) — the pipeline floor: source scan,
-  eager localCheckpoint (error forcing), checkpoint commit, noop sink.
+  checkpoint commit, noop sink.
 - scale_jvm: T1 affine map via Catalyst ``transform_values`` — the
   JVM-native path a Spark-first rewrite makes possible.
 - python_filter: T9 — the reference CONTRACT path (list-of-dicts
-  filter fn run via Arrow-batched mapInPandas, executor-parallel).
+  filter fn run via Arrow-batched mapInArrow, executor-parallel).
 - deadband_stateful: G34 ``applyInPandasWithState`` — cross-batch
   state, the T10 buffering contract.
 
@@ -235,7 +235,7 @@ def _coalesce_ab(spark, attempts: int) -> None:
     """The documented answer to the small-trigger floor, measured
     (VERDICT r7 ask #6): the SAME 50x1000-row file drop consumed at
     ``maxFilesPerTrigger`` 1 / 10 / 50.  Per-trigger fixed cost
-    (checkpoint commit + eager error-forcing localCheckpoint + schedule)
+    (checkpoint commit + source listing + schedule)
     is paid per micro-batch, so coalescing k files per trigger divides
     the floor by ~k until the batch is big enough for Arrow/codegen to
     amortize.  Latency trade: a reading waits for its trigger, so k
