@@ -40,17 +40,6 @@ if _REPO_ROOT not in sys.path:
 _BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "420"))
 _T_START = time.monotonic()
 
-# Quiet-box flag (r16 verdict ask 5): a bench sample is machine-tagged
-# quiet=true when its single-threaded control (the 10x reference-sim
-# rows/s — pure box speed, code frozen since r7) reaches this floor.
-# The pinned threshold is the r14-r16 adjudication band: clean samples
-# clustered at 135-157k rows/s, degraded-box samples at 111-130k, so
-# 135k separates them.  SCALE.md quotes only quiet-tagged samples for
-# cross-round claims; degraded samples stay recorded but flagged.
-_QUIET_CONTROL_FLOOR = int(
-    os.environ.get("SPARK_GRAFT_QUIET_CONTROL_FLOOR", "135000")
-)
-
 
 def _elapsed() -> float:
     return time.monotonic() - _T_START
@@ -269,11 +258,6 @@ def main() -> None:
             p["control"] = {
                 "ref_sim_10x_rows_per_sec": ctrl,
                 "norm_wall": round(wall * ctrl / 1e5, 1),
-                # machine-tagged box condition (r16 verdict ask 5):
-                # replaces the hand-adjudicated exclusion of degraded
-                # samples — SCALE.md cites this flag, not judgement
-                "quiet": ctrl >= _QUIET_CONTROL_FLOOR,
-                "quiet_control_floor": _QUIET_CONTROL_FLOOR,
             }
         if skipped:
             p["skipped_queries"] = skipped

@@ -23,9 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
-from foglamp_filter_python35_spark.functions.sqltext import quote_ident
+from foglamp_filter_python35_spark.sources.readers import data_files, read_parquet
 
 
 @dataclass(frozen=True)
@@ -36,14 +35,9 @@ class QuerySpec:
     headline: bool = False  # include in bench.py
 
 
-# driver testdata stores timestamps as parquet TIMESTAMP(NANOS), which
-# Spark cannot read natively; with spark.sql.legacy.parquet.nanosAsLong
-# they surface as nano-precision longs and are rebuilt here.  Newer
-# testdata drops store TIMESTAMP(MICROS) without a UTC annotation, which
-# Spark 4 reads as TIMESTAMP_NTZ; every catalog query (and the round-1
-# driver-green baseline) expects session-tz TIMESTAMP, so both shapes are
-# normalized to it — with the session tz pinned to UTC the NTZ->LTZ cast
-# relabels the same instant and is deterministic.
+# timestamp columns of the driver tables, rebuilt to session TIMESTAMP
+# by read_parquet; every catalog query (and the round-1 driver-green
+# baseline) expects that type
 _TS_COLUMNS = {
     "events": ("ts",),
     "lineitem": ("l_shipdate",),
@@ -51,70 +45,14 @@ _TS_COLUMNS = {
 }
 
 
-# (table path, on-disk fingerprint) -> inferred parquet read schema.
-# Schema inference launches one small Spark job per read (~98ms warm at
-# sf0.1); every catalog query build pays it 1-3x, so the full 153-query
-# sweep spends ~15-20s on repeated inference of the same static tables.
-# Caching the INFERRED SCHEMA (metadata only — never rows, never
-# results; same class as the r17 footer-count read) makes repeat loads
-# job-free (~20ms).  The fingerprint (path, mtime, size and inode of
-# every data file) in the key makes a table rewritten in place miss the
-# cache and be re-inferred; the inference conf (nanosAsLong) is pinned
-# by load() itself, so a cached schema always equals what fresh
-# inference would return.
-_SCHEMA_CACHE: dict = {}
-
-
-def _data_files(path: str) -> list[str]:
-    """The files Spark reads for a table path: the path itself for a
-    file; for a directory, mirror Spark's file listing (ADVICE r17) —
-    recurse into partitioned/nested layouts and skip '_'/'.'-prefixed
-    entries (_SUCCESS, _metadata, hidden dirs) at EVERY level."""
-    if not os.path.isdir(path):
-        return [path]
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        out += [
-            os.path.join(root, f)
-            for f in sorted(files)
-            if not f.startswith(("_", "."))
-        ]
-    return out
-
-
-def _fingerprint(path: str) -> tuple | None:
-    """(path, mtime, size, inode) of every data file of a table, or None
-    when the path is not on the local filesystem (never cached)."""
-    if not os.path.exists(path):
-        return None
-    stats = [(f, os.stat(f)) for f in _data_files(path)]
-    return tuple((f, s.st_mtime_ns, s.st_size, s.st_ino) for f, s in stats)
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    try:  # defensive: the driver's own session may not carry these confs
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:  # defensive: the driver's own session may not carry this conf
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    key = (path, _fingerprint(path))
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if key[1] is not None:
-            _SCHEMA_CACHE[key] = df.schema
-    for c in _TS_COLUMNS.get(table, ()):
-        field = df.schema[c]
-        if isinstance(field.dataType, LongType):
-            # integer div — float division would lose precision on e18 nanos
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{quote_ident(c)} div 1000")))
-        elif isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return read_parquet(
+        spark, os.path.join(sf_dir, f"{table}.parquet"), _TS_COLUMNS.get(table, ())
+    )
 
 
 def parquet_row_count(sf_dir: str, table: str) -> int:
@@ -132,7 +70,7 @@ def parquet_row_count(sf_dir: str, table: str) -> int:
     path = os.path.join(sf_dir, f"{table}.parquet")
     return sum(
         pq.ParquetFile(f).metadata.num_rows
-        for f in _data_files(path)
+        for f in data_files(path)
         if f.endswith(".parquet")
     )
 

@@ -436,7 +436,7 @@ def _df_pruned_and_stats(
     sf0.1, exact parity): inside ``dedup_ensemble`` — where the shingle
     stream explodes an already-persisted sets frame and three signal
     branches compete for the same stage slots — the persist took the
-    containment branch 3.12s -> 1.97s (tools/r18_containment_ab.py);
+    containment branch 3.12s -> 1.97s (9911545:tools/r18_containment_ab.py);
     standalone ``doc_containment`` measured it flat-to-worse (1.97s
     plain vs 2.11s persisted), so the default stays off.  A
     broadcast-survivors verify (the minhash-verify shape) was also

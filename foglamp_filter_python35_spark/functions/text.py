@@ -304,15 +304,3 @@ def stratified_sample_pct(
     )
     return df.filter(md5_bucket(id_col) < rate)
 
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set as columns (the composable operator)."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_distinct_tokens", distinct_token_count(text_col))
-        .withColumn("avg_token_len", avg_token_length(text_col))
-        .withColumn("stopword_ratio", stopword_ratio(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", language_id(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )

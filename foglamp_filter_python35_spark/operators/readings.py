@@ -58,9 +58,8 @@ def add_constant(df: DataFrame, constant: float = 100.0) -> DataFrame:
 # T3 — asset filter: keep readings whose asset_code is in a config list.
 # Reference: readings35.py:53-57 exposes filter_config['asset_code'];
 # applying it is the script's job (the contract surface).
-# For short lists Catalyst compiles isin() to an in-set predicate that is
-# pushed down to the parquet scan; for very long lists use a broadcast
-# semi-join instead (asset_semi_join below).
+# Catalyst compiles isin() to an in-set predicate that is pushed down to
+# the parquet scan.
 # ---------------------------------------------------------------------------
 
 
@@ -68,27 +67,14 @@ def asset_filter(df: DataFrame, assets: list[str]) -> DataFrame:
     return df.filter(F.col("asset_code").isin(assets))
 
 
-def asset_semi_join(df: DataFrame, assets_df: DataFrame) -> DataFrame:
-    """Scale path for huge asset lists: broadcast LEFT SEMI join — no
-    shuffle of the fact side, no row duplication."""
-    return df.join(
-        F.broadcast(assets_df), on="asset_code", how="left_semi"
-    )
-
-
 # ---------------------------------------------------------------------------
 # T4 — row drop by arbitrary predicate (the "discard data" contract,
-# plugin.cpp:113-116; readings35.py:49).
+# plugin.cpp:113-116; readings35.py:49) is a bare ``df.filter(pred)``.
 # ---------------------------------------------------------------------------
 
 
-def drop_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Keep rows matching ``predicate`` (drop the rest)."""
-    return df.filter(predicate)
-
-
 # ---------------------------------------------------------------------------
-# T5 — projection over datapoints: add/remove/rename keys inside the
+# T5 — projection over datapoints: add/remove keys inside the
 # reading map (plugin.cpp:51-52 — output is whatever dict the script
 # returns; rebuild at python35_filter.cpp:182-216).
 # ---------------------------------------------------------------------------
@@ -100,16 +86,6 @@ def project_datapoints(df: DataFrame, keep: list[str]) -> DataFrame:
     return df.withColumn(
         "reading",
         F.map_filter(F.col("reading"), lambda k, _v: F.array_contains(keep_arr, k)),
-    )
-
-
-def rename_datapoint(df: DataFrame, old: str, new: str) -> DataFrame:
-    return df.withColumn(
-        "reading",
-        F.transform_keys(
-            F.col("reading"),
-            lambda k, _v: F.when(k == F.lit(old), F.lit(new)).otherwise(k),
-        ),
     )
 
 
@@ -145,12 +121,8 @@ def drop_empty_payload(df: DataFrame) -> DataFrame:
 # the output reading iff present in the returned dict; otherwise a new
 # reading gets fresh identity/timestamps (python35_filter.cpp:222-244;
 # header comment :127-131 "new readings have new timestamps, new UUID").
+# The 'present in result' branch is the identity (registered below).
 # ---------------------------------------------------------------------------
-
-
-def carry_metadata(df: DataFrame) -> DataFrame:
-    """Identity on metadata columns — the 'present in result' branch."""
-    return df
 
 
 def regenerate_metadata(df: DataFrame) -> DataFrame:

@@ -84,12 +84,6 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     return node_count(df, "HashAggregate") >= 2
 
 
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """NOTE: under AQE the formatted plan only shows codegen spans after
-    execution; prefer ``is_fully_jvm`` for plan-time checks."""
-    return count_occurrences(df, "WholeStageCodegen")
-
-
 #: every physical node that evaluates user Python (row-at-a-time, Arrow
 #: scalar, grouped map/agg, co-grouped, arrow-native, stateful, UDTF)
 _PYTHON_NODES = (

@@ -26,12 +26,6 @@ import zipimport
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
-# NOTE: read inside get_spark, not at import time — the master URL and
-# shuffle sizing must agree even when the env var is set after import
-def _default_shuffle_partitions() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 def get_spark(
     app_name: str = "foglamp-filter-python35-spark",
     master: str | None = None,
@@ -44,6 +38,8 @@ def get_spark(
     configured; on a real deployment callers pass nothing and spark-submit
     owns the master URL.
     """
+    # read here, not at import time: the master URL and the shuffle
+    # sizing must agree even when the env var is set after import
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -51,7 +47,6 @@ def get_spark(
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
 
-    n_shuffle = shuffle_partitions or _default_shuffle_partitions()
     conf = {
         # --- correctness across engines ---
         "spark.sql.session.timeZone": "UTC",
@@ -63,7 +58,7 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # --- shuffle sizing (local harness; AQE coalesces upward of this) ---
-        "spark.sql.shuffle.partitions": str(n_shuffle),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or int(cpus)),
         # --- Arrow everywhere Python touches data ---
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
@@ -85,25 +80,6 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load every driver table in ``sf_dir`` as a dict of DataFrames.
-
-    Delegates to ``catalog.load`` so nano-timestamp rebuilding happens
-    exactly once, in one place — a raw ``spark.read.parquet`` here would
-    hand back nano longs for events/lineitem/orders time columns."""
-    from foglamp_filter_python35_spark.catalog import load  # noqa: PLC0415
-
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {
-        n: load(spark, sf_dir, n)
-        for n in names
-        if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))
-    }
 
 
 def _stat_checked_zip_invalidation() -> None:

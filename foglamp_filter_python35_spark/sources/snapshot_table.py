@@ -596,7 +596,7 @@ def _env_int(name: str, default: int) -> int:
 # saves rewriting at most the whole table, so when the whole table
 # rewrites in less than the collect job costs the probe is a pure tax
 # (r16 verdict ask 1).  The 64 MiB default is a local[32] measurement
-# (tools/merge_scale_probe.py --adaptive, extreme-pair shape, SCALE.md
+# (9911545:tools/merge_scale_probe.py --adaptive, extreme-pair shape, SCALE.md
 # r16): hull-only wins at 42MB (1.41s vs 1.47s), keyset wins at 125MB
 # (1.58s vs 2.05s) — 64MB splits the bracket.  Re-tune by re-running
 # that probe on the target cluster: the crossover tracks the cost of
@@ -983,7 +983,7 @@ def _merge_key_probe(
 # files x 100k keys (r16 probe).  With the budget + the exact
 # per-column bisect check the same shape is ~0.5s.  The 2M default is a
 # local[32] measurement: re-tune by timing the budget-burner shape of
-# tools/merge_scale_probe.py --wide-manifest on the target DRIVER node
+# 9911545:tools/merge_scale_probe.py --wide-manifest on the target DRIVER node
 # — the budget caps pure driver CPU, so a slower driver moves it down,
 # and a deployment that would rather burn driver seconds than rewrite
 # conservative-candidate files moves it up.  Exhaustion degrades to

@@ -47,7 +47,7 @@ def test_catalog_module_edit_forces_only_its_queries():
 
 
 def test_non_package_files_force_nothing():
-    assert rw.forced_queries(["tools/media_scale_probe.py", "bench.py"])[0] == []
+    assert rw.forced_queries(["tools/plan_audit.py", "bench.py"])[0] == []
 
 
 def test_init_edit_forces_everything_but_is_not_traversed():

@@ -8,7 +8,7 @@ these tests pin (a) the exact measured schedule, (b) that the PRODUCTION
 entry points (no hand tuning) flow through them, and (c) that under the
 defaults the candidate-pair count stays O(n) on 10x probe-style data
 (per-replica sign masks preserve intra-replica cosine bit-exactly while
-decorrelating replicas — the same construction as tools/scale_probe.py).
+decorrelating replicas).
 """
 
 from __future__ import annotations

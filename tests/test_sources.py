@@ -37,6 +37,22 @@ def test_readings_parquet_rejects_wrong_schema(spark, sf_smoke, tmp_path):
         R.read_readings_parquet(spark, path)
 
 
+def test_readings_parquet_rejects_wrong_value_type(spark, tmp_path):
+    """All six columns present, but ``reading`` carries string values:
+    the dtype check, not the column-name check, rejects it."""
+    import datetime as dt
+
+    path = str(tmp_path / "string_readings")
+    t = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [(1, "a", t, t, {"v": "1.5"}, {})],
+        "id long, asset_code string, ts timestamp, user_ts timestamp, "
+        "reading map<string,string>, reading_str map<string,string>",
+    ).write.parquet(path)
+    with pytest.raises(ValueError, match="dtype mismatches"):
+        R.read_readings_parquet(spark, path)
+
+
 @pytest.mark.slow
 def test_partitioned_writer_enables_pruning(spark, sf_smoke, tmp_path):
     readings = events_to_readings(load(spark, sf_smoke, "events"))
@@ -195,33 +211,6 @@ def test_observe_metrics_batch(spark, sf_smoke):
     #  StreamingQueryProgress.observedMetrics[name])
 
 
-def test_bucketed_tables_join_without_shuffle(spark, sf_smoke, tmp_path):
-    """The 100 TB co-location story: two tables bucketed on the join key
-    join with ZERO exchanges — Catalyst trusts the bucketing layout."""
-    orders = load(spark, sf_smoke, "orders")
-    cust = load(spark, sf_smoke, "customer")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the test exercises the bucketed path
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        R.write_bucketed(
-            orders.withColumnRenamed("o_custkey", "custkey"),
-            "b_orders", "custkey", n_buckets=8,
-        )
-        R.write_bucketed(
-            cust.withColumnRenamed("c_custkey", "custkey"),
-            "b_cust", "custkey", n_buckets=8,
-        )
-        joined = spark.table("b_orders").join(spark.table("b_cust"), "custkey")
-        assert E.shuffle_count(joined) == 0, E.formatted_plan(joined)
-        # and the join still returns the right number of rows
-        assert joined.count() == orders.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_cust")
-
-
 def test_readings_jsonl_valid_and_corrupt_split(spark, tmp_path):
     """S1 wire-format ingest: good lines land in READING_SCHEMA, a broken
     line is quarantined per-line (not whole-batch) per the 100 TB note in
@@ -327,31 +316,6 @@ def test_stream_readings_jsonl_good_and_bad_streams(spark, tmp_path):
     finally:
         q1.stop()
         q2.stop()
-
-
-def test_orc_round_trip_with_pushdown(spark, tmp_path):
-    """ORC read/write round-trips the readings schema and pushes filters
-    down to the scan like parquet (built-in columnar source)."""
-    from pyspark.sql import functions as F
-
-    from foglamp_filter_python35_spark.plans import explain as E
-    from foglamp_filter_python35_spark.sources.readers import (
-        read_orc,
-        write_orc,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        "id long, asset_code string, value double",
-    )
-    path = str(tmp_path / "readings_orc")
-    write_orc(df, path)
-    back = read_orc(spark, path, df.schema)
-    assert back.schema == df.schema
-    assert sorted(r.id for r in back.collect()) == [1, 2, 3]
-    filtered = back.filter(F.col("asset_code") == "a")
-    assert E.pushed_filters(filtered), "ORC scan must receive pushdown"
-    assert sorted(r.id for r in filtered.collect()) == [1, 3]
 
 
 def test_session_raises_python_auth_socket_timeout(spark):

@@ -1,9 +1,7 @@
-"""Storage-layout claims, verified at plan level: the bucketed-table
-join really is shuffle-free on the bucketed side, and the partitioned
+"""Storage-layout claim, verified at plan level: the partitioned
 readings layout really turns time/asset predicates into partition
-pruning.  These are the SCALE.md claims behind 'recurring ingest joins
-shuffle only the incoming batch' and 'readings queries prune instead of
-scan'."""
+pruning.  This is the SCALE.md claim behind 'readings queries prune
+instead of scan'."""
 
 from __future__ import annotations
 
@@ -12,47 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from foglamp_filter_python35_spark.plans import explain as E
-
-
-def test_bucketed_fingerprint_join_skips_corpus_shuffle(spark, tmp_path):
-    """Incremental dedup at scale: corpus fingerprints stored BUCKETED
-    by fp make the recurring anti join shuffle-free on the corpus side —
-    only the small incoming batch is exchanged."""
-    from foglamp_filter_python35_spark.sources.readers import write_bucketed
-
-    # conftest's session already points spark.sql.warehouse.dir at a
-    # tmp location (static conf — cannot be set per-test)
-    corpus = spark.range(0, 10_000).select(
-        F.md5(F.col("id").cast("string")).alias("fp")
-    )
-    table = "corpus_fps_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_bucketed(corpus, table, "fp", n_buckets=8)
-    try:
-        stored = spark.table(table)
-        # half the batch collides with the corpus, half is new
-        batch = spark.range(0, 100).select(
-            F.md5(
-                F.when(F.col("id") < 50, F.col("id"))
-                .otherwise(F.col("id") + 20_000)
-                .cast("string")
-            ).alias("fp")
-        )
-        # disable broadcast so the join must pick SMJ/shuffle strategy —
-        # the bucketed side should STILL not exchange
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            fresh = batch.join(stored, "fp", "left_anti")
-            plan = E.formatted_plan(fresh)
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            # exactly ONE exchange: the incoming batch; the bucketed
-            # corpus reads pre-partitioned
-            assert plan.count("hashpartitioning(") == 1, plan
-            assert fresh.count() == 50  # only the genuinely-new half
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_partitioned_readings_layout_prunes_partitions(spark, tmp_path):
